@@ -1,63 +1,115 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CacheBridge
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Distributed global row index over a total order — the scalable encoding
   * of pandas positional alignment (reference utils.py `df['col'] = series`
   * semantics), replacing the single-partition `row_number() OVER (ORDER BY
   * …)` that dies at scale.
   *
-  * Two-pass scheme (the classic zipWithIndex shape, in DataFrame ops):
+  * Every entry point ([[withGlobalIndexReleasable]],
+  * [[withGlobalCumsumReleasable]], [[withGlobalRunning]],
+  * [[withGroupedIndex]]) is one core: per group (none for the global
+  * forms) a 1-based rank, EXCLUSIVE prefix sums and the totals, over the
+  * order `groupCols ++ order`. The core first passes the measured-size
+  * gate ([[sortedIfSmall]]): it caches the input and counts it in one job,
+  * and releases that cache before either path's result is built.
   *
-  *  1. range-repartition on the order columns, so partition i holds keys
-  *     strictly below partition i+1;
-  *  2. one tiny job collects per-partition row counts → cumulative offsets
-  *     (≤ one row per partition — driver-size at any scale);
-  *  3. global index = row_number over a PARTITION-LOCAL window (partitioned
-  *     by spark_partition_id — no single-partition exchange) + the
-  *     partition's offset.
+  *  - Driver path: at most [[MaxDriverRows]] rows AND a cached size of at
+  *    most `spark.sql.autoBroadcastJoinThreshold` bytes. One
+  *    `orderBy(order).limit(n).collect()` takes the sorted rows, the ranks
+  *    and prefix sums fold on the driver, and the result is a local frame
+  *    with the same columns and types.
+  *    Distinct-value cell frames (a few hundred rows) always land here.
+  *  - Ranged path (past either bound), on the input as given: the
+  *    two-pass scheme, the classic zipWithIndex shape in DataFrame ops —
+  *     1. range-repartition on the order columns, so partition i holds
+  *        keys strictly below partition i+1;
+  *     2. one tiny job collects per-(partition, group) counts and sums →
+  *        cumulative offsets (≤ one row per partition and group —
+  *        driver-size at any scale);
+  *     3. rank = row_number over a PARTITION-LOCAL window (partitioned by
+  *        spark_partition_id — no single-partition exchange) + the offset,
+  *        attached by a broadcast join.
+  *    The range-partitioned frame is cached so the count pass and the
+  *    final plan see identical partition boundaries (RangePartitioner
+  *    samples).
   *
-  * The range-partitioned frame is cached so the count pass and the final
-  * plan see identical partition boundaries (RangePartitioner samples);
-  * release it via the session's cache clearing once the result is consumed.
+  * The session conf [[ForceDistributedConf]]
+  * (`spark.graft.gate.forceDistributed`, default false; a `-D` system
+  * property sets it too) skips the gate and runs the ranged path on the
+  * input as given — the plans a 100 TB run takes, which ExplainAudit and
+  * the parity specs keep checking.
   *
-  * `order` must be a TOTAL order (unique keys): ties that straddle range
-  * boundaries would make the index non-deterministic, exactly as they do
-  * for a global row_number.
+  * `order` must be a TOTAL order (unique keys) on BOTH paths: ties take
+  * arbitrary ranks (on the ranged path they may even straddle range
+  * boundaries), exactly as they do for a global row_number, so the two
+  * paths agree row for row only on a total order.
   */
 object GlobalIndex {
+
+  /** Session conf: `true` skips the measured-size gate everywhere. */
+  val ForceDistributedConf = "spark.graft.gate.forceDistributed"
+
+  /** Row bound of the driver path (the byte bound is the session's
+    * `spark.sql.autoBroadcastJoinThreshold`). */
+  val MaxDriverRows: Long = 1L << 16
+
+  private def forceDistributed(spark: SparkSession): Boolean =
+    spark.conf.getOption(ForceDistributedConf).exists(_.trim.toBoolean)
+
+  /** Every gate decision logs here at INFO (`<op> path=driver|ranged|forced
+    * rows=… bytes=…`); the shipped log4j2.properties keeps it at WARN. */
+  private val gateLog = org.slf4j.LoggerFactory.getLogger("graft.gate")
+
+  /** The measured-size gate shared by the GlobalIndex core and the inline
+    * two-pass copies (FdrSweep, Wasserstein). Caches `df` (unless the
+    * caller already did) and fills the cache with one job that counts its
+    * rows. Small frame — at most [[MaxDriverRows]] rows and at most
+    * `autoBroadcastJoinThreshold` cached bytes: `Some(rows sorted by
+    * order)`. Otherwise `None`: the caller runs its ranged plan on `df` as
+    * given. Either way the gate's cache is released before it returns, so
+    * a large input never sits in the input cache and the range cache at
+    * once (GlobalIndexRangedBench measured that overlap: about twice the
+    * persisted bytes and no faster). Under [[ForceDistributedConf]]:
+    * `None`, without measuring. */
+  private[graft] def sortedIfSmall(op: String, df: DataFrame,
+      order: Seq[Column]): Option[Array[Row]] = {
+    val spark = df.sparkSession
+    if (forceDistributed(spark)) {
+      gateLog.info(s"$op path=forced")
+      return None
+    }
+    val owned = !CacheBridge.isCached(df)
+    val cached = if (owned) df.cache() else df
+    val (rows, bytes) = CacheBridge.fill(cached)
+    val small = rows <= MaxDriverRows &&
+      bytes <= spark.sessionState.conf.autoBroadcastJoinThreshold
+    gateLog.info(
+      s"$op path=${if (small) "driver" else "ranged"} rows=$rows bytes=$bytes")
+    val sorted =
+      if (!small) None
+      else if (rows == 0) Some(Array.empty[Row])
+      else Some(cached.orderBy(order: _*).limit(rows.toInt).collect())
+    if (owned) cached.unpersist(blocking = false)
+    sorted
+  }
 
   /** [[withGlobalIndex]] plus an explicit release handle for the internal
     * range-partitioned cache (the fitReleasable pattern): callers invoke the
     * handle once the indexed output is materialized. Releasing BEFORE
     * materialization is unsafe — a re-evaluation would resample the range
-    * boundaries and shift the index. */
+    * boundaries and shift the index. On the driver path the handle is a
+    * no-op (the result is a local frame). */
   def withGlobalIndexReleasable(df: DataFrame, order: Seq[Column],
       indexCol: String = "rn", numPartitions: Int = 0)
       : (DataFrame, () => Unit) = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val parts = if (numPartitions > 0) numPartitions
-      else spark.sessionState.conf.numShufflePartitions
-    val ranged = df.repartitionByRange(parts, order: _*).cache()
-    val withPid = ranged.withColumn("__pid", spark_partition_id())
-    val counts = withPid.groupBy("__pid").agg(count(lit(1)).as("c"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    val offsets = counts.map(_._2).scanLeft(0L)(_ + _).init
-    // offsets attach via a broadcast join on the partition id: the (pid,
-    // offset) frame is ≤ one row per partition, and a join keeps the plan
-    // O(1) in expression depth — a when-chain over 10k+ partitions (what a
-    // 100 TB sort implies) blows up codegen into a 10k-deep case expression.
-    val offDf = counts.map(_._1).zip(offsets).toSeq.toDF("__pid", "__off")
-    val w = Window.partitionBy("__pid").orderBy(order: _*)
-    val indexed = withPid
-      .join(broadcast(offDf), Seq("__pid"), "left")
-      .withColumn(indexCol,
-        row_number().over(w).cast("long") + coalesce(col("__off"), lit(0L)))
-      .drop("__pid", "__off")
-    (indexed, () => { ranged.unpersist(blocking = false); () })
+    val r = running(df, Nil, order, Nil, Some(indexCol), None, numPartitions)
+    (r.frame, r.release)
   }
 
   def withGlobalIndex(df: DataFrame, order: Seq[Column],
@@ -65,107 +117,45 @@ object GlobalIndex {
     withGlobalIndexReleasable(df, order, indexCol, numPartitions)._1
 
   /** Global EXCLUSIVE prefix sum of `valueCol` over a total order — the
-    * running-total twin of [[withGlobalIndexReleasable]] (same two-pass
-    * range-partition scheme, per-partition SUM instead of COUNT feeding
-    * the offsets), replacing the single-partition
-    * `sum() OVER (ORDER BY …)` that dies at scale. Null values count as
-    * 0. Exclusive (the sum of all STRICTLY-preceding rows) because that
-    * is what consumers want as a start offset — sequence packing, byte
-    * offsets, allocation cursors.
+    * running-total twin of [[withGlobalIndexReleasable]], replacing the
+    * single-partition `sum() OVER (ORDER BY …)` that dies at scale. Null
+    * values count as 0. Exclusive (the sum of all STRICTLY-preceding rows)
+    * because that is what consumers want as a start offset — sequence
+    * packing, byte offsets, allocation cursors.
     *
     * `order` must be a TOTAL order (the [[withGlobalIndex]] convention):
-    * the in-partition window uses an explicit ROWS frame, so with ties the
-    * per-row result depends on the (nondeterministic) tie order. */
+    * with ties the per-row result depends on the (nondeterministic) tie
+    * order. */
   def withGlobalCumsumReleasable(df: DataFrame, order: Seq[Column],
       valueCol: Column, cumsumCol: String = "cumsum_excl",
       numPartitions: Int = 0): (DataFrame, () => Unit) = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val parts = if (numPartitions > 0) numPartitions
-      else spark.sessionState.conf.numShufflePartitions
-    val ranged = df.withColumn("__v",
-        coalesce(valueCol.cast("long"), lit(0L)))
-      .repartitionByRange(parts, order: _*).cache()
-    val withPid = ranged.withColumn("__pid", spark_partition_id())
-    val sums = withPid.groupBy("__pid").agg(sum("__v").as("s"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    val offsets = sums.map(_._2).scanLeft(0L)(_ + _).init
-    val offDf = sums.map(_._1).zip(offsets).toSeq.toDF("__pid", "__off")
-    // explicit ROWS frame: the default RANGE frame sums over ALL tied rows,
-    // which under non-unique order keys is not a prefix sum of any ordering
-    val w = Window.partitionBy("__pid").orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val out = withPid
-      .join(broadcast(offDf), Seq("__pid"), "left")
-      .withColumn(cumsumCol,
-        sum("__v").over(w) - col("__v") + coalesce(col("__off"), lit(0L)))
-      .drop("__pid", "__off", "__v")
-    (out, () => { ranged.unpersist(blocking = false); () })
+    val r = running(df, Nil, order, Seq(valueCol -> cumsumCol), None, None,
+      numPartitions)
+    (r.frame, r.release)
   }
 
   def withGlobalCumsum(df: DataFrame, order: Seq[Column], valueCol: Column,
       cumsumCol: String = "cumsum_excl", numPartitions: Int = 0): DataFrame =
     withGlobalCumsumReleasable(df, order, valueCol, cumsumCol, numPartitions)._1
 
-  /** Generalized single-partition-window replacement: over ONE
-    * range-partitioned cache on `order`, computes an optional global row
-    * index plus an EXCLUSIVE global prefix sum for EACH of `sums`
-    * (valueCol → output name), and returns the per-column grand totals
-    * and row count (driver values — the k-row/1-row literals a caller
-    * formerly read off `count().over()` / `sum().over()` unbounded
-    * windows). One tiny collected job (≤ one row per partition) feeds
-    * every offset; inclusive running values are `excl + own`, exactly the
-    * single-partition window's integers. Null values count as 0 (the
-    * [[withGlobalCumsumReleasable]] convention); `order` must be a total
-    * order for deterministic per-row sums (value-cell frames — one row
-    * per distinct value — always qualify). The ranged cache stays for the
-    * session (boundary-resample hazard). */
+  /** Generalized single-partition-window replacement: over `order`,
+    * computes an optional global row index plus an EXCLUSIVE global prefix
+    * sum for EACH of `sums` (valueCol → output name), and returns the
+    * per-column grand totals and row count (driver values — the
+    * k-row/1-row literals a caller formerly read off `count().over()` /
+    * `sum().over()` unbounded windows). Inclusive running values are
+    * `excl + own`, exactly the single-partition window's integers. Null
+    * values count as 0 (the [[withGlobalCumsumReleasable]] convention);
+    * `order` must be a total order for deterministic per-row sums
+    * (value-cell frames — one row per distinct value — always qualify).
+    * On the ranged path the range cache stays for the session
+    * (boundary-resample hazard). */
   def withGlobalRunning(df: DataFrame, order: Seq[Column],
       sums: Seq[(Column, String)], indexCol: String = null,
       numPartitions: Int = 0): (DataFrame, Array[Long], Long) = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val parts = if (numPartitions > 0) numPartitions
-      else spark.sessionState.conf.numShufflePartitions
-    val withVals = sums.zipWithIndex.foldLeft(df) {
-      case (acc, ((c, _), i)) =>
-        acc.withColumn(s"__v$i", coalesce(c.cast("long"), lit(0L))) }
-    val ranged = withVals.repartitionByRange(parts, order: _*).cache()
-    val withPid = ranged.withColumn("__pid", spark_partition_id())
-    val aggs = count(lit(1)).as("__c") +:
-      sums.indices.map(i => sum(s"__v$i").as(s"__s$i"))
-    val rows = withPid.groupBy("__pid").agg(aggs.head, aggs.tail: _*)
-      .collect().sortBy(_.getInt(0))
-    val n = rows.map(_.getLong(1)).sum
-    val totals = sums.indices.map(i =>
-      rows.map(_.getLong(i + 2)).sum).toArray
-    val cOffs = rows.map(_.getLong(1)).scanLeft(0L)(_ + _).init
-    val sOffs = sums.indices.map(i =>
-      rows.map(_.getLong(i + 2)).scanLeft(0L)(_ + _).init)
-    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
-    val offRows = rows.indices.map(i =>
-      org.apache.spark.sql.Row.fromSeq(
-        rows(i).getInt(0) +: cOffs(i) +: sums.indices.map(sOffs(_)(i))))
-    val offDf = broadcast(spark.createDataFrame(
-      spark.sparkContext.parallelize(offRows, 1),
-      StructType(StructField("__pid", IntegerType) +:
-        StructField("__coff", LongType) +:
-        sums.indices.map(i => StructField(s"__soff$i", LongType)))))
-    val wRows = Window.partitionBy("__pid").orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val joined = withPid.join(offDf, Seq("__pid"))
-    val withSums = sums.zipWithIndex.foldLeft(joined) {
-      case (acc, ((_, name), i)) =>
-        acc.withColumn(name,
-          sum(s"__v$i").over(wRows) - col(s"__v$i") + col(s"__soff$i")) }
-    val out0 =
-      if (indexCol == null) withSums
-      else withSums.withColumn(indexCol,
-        row_number().over(Window.partitionBy("__pid").orderBy(order: _*))
-          .cast("long") + col("__coff"))
-    val dropCols = Seq("__pid", "__coff") ++
-      sums.indices.map(i => s"__v$i") ++ sums.indices.map(i => s"__soff$i")
-    (out0.drop(dropCols: _*), totals, n)
+    val r = running(df, Nil, order, sums, Option(indexCol), None,
+      numPartitions)
+    (r.frame, r.totals, r.n)
   }
 
   /** PER-GROUP global rank + group totals over a within-group total
@@ -174,63 +164,171 @@ object GlobalIndex {
     * parallelism is capped at |groups| (3 for a returnflag-keyed median:
     * a third of the corpus through one task at any scale).
     *
-    * Same two-pass scheme, range-partitioned on (groupCols ++ order) so a
-    * group SPANS partitions while every partition still holds
-    * contiguous-in-order slices: one tiny job collects per-(partition,
-    * group) counts; per-group offsets accumulate driver-side in partition
-    * order (≤ partitions·|groups| rows — driver-sized whenever |groups|
-    * is a reporting axis); rank = partition-local row_number + the
-    * (partition, group) offset. Group TOTALS fall out of the same
-    * collected counts and attach as `countCol` (a broadcast |groups|-row
-    * join), so callers get rank + n in ONE data shuffle.
+    * On the ranged path the range partitioning is on (groupCols ++ order),
+    * so a group SPANS partitions while every partition still holds
+    * contiguous-in-order slices; per-group offsets accumulate driver-side
+    * in partition order (≤ partitions·|groups| rows — driver-sized
+    * whenever |groups| is a reporting axis), and the group TOTAL rides on
+    * the same broadcast offset row as `countCol`, so callers get rank + n
+    * in ONE data shuffle. A NULL group key is a group like any other (the
+    * offsets attach by null-safe equality), as in the window.
     *
-    * Equal keys land in one range partition, so ranks are deterministic
-    * per VALUE; rows tied on (group, order) take arbitrary ranks WITHIN
-    * the tie run, exactly as the single-partition window's row_number
-    * does — callers must be tie-insensitive (order statistics on values
-    * are). The ranged frame stays cached (the boundary-resample hazard,
-    * see [[withGlobalIndexReleasable]]); the session owns the release. */
+    * Output columns: groupCols, the other input columns, `indexCol`,
+    * `countCol`. Rows tied on (group, order) take arbitrary ranks WITHIN
+    * the tie run, exactly as the window's row_number does — callers must
+    * be tie-insensitive (order statistics on values are). The ranged
+    * frame stays cached (the boundary-resample hazard, see
+    * [[withGlobalIndexReleasable]]); the session owns the release. */
   def withGroupedIndex(df: DataFrame, groupCols: Seq[String],
       order: Seq[Column], indexCol: String = "rn",
-      countCol: String = "cnt", numPartitions: Int = 0): DataFrame = {
-    val spark = df.sparkSession
+      countCol: String = "cnt", numPartitions: Int = 0): DataFrame =
+    running(df, groupCols, order, Nil, Some(indexCol), Some(countCol),
+      numPartitions).frame
+
+  /** Result of the core: the frame, the grand totals of the sums, the row
+    * count, and the handle that drops the ranged cache (a no-op on the
+    * driver path). */
+  private final case class Running(frame: DataFrame, totals: Array[Long],
+      n: Long, release: () => Unit)
+
+  /** The one core. Output columns: `groupCols`, the other input columns,
+    * the sum names, then `indexCol` and `countCol` when given. */
+  private def running(df: DataFrame, groupCols: Seq[String],
+      order: Seq[Column], sums: Seq[(Column, String)],
+      indexCol: Option[String], countCol: Option[String],
+      numPartitions: Int): Running = {
+    val vals = sums.indices.map(i => s"__v$i")
+    val withVals = sums.zip(vals).foldLeft(df) { case (acc, ((c, _), v)) =>
+      acc.withColumn(v, coalesce(c.cast("long"), lit(0L))) }
+    val added = sums.map(_._2) ++ indexCol ++ countCol
+    val outCols = groupCols ++
+      df.columns.filterNot(c => groupCols.contains(c) || added.contains(c)) ++
+      added
+    val op = if (groupCols.nonEmpty) "GlobalIndex.withGroupedIndex"
+      else "GlobalIndex.running"
+    sortedIfSmall(op, withVals, groupCols.map(quoted) ++ order) match {
+      case Some(rows) =>
+        onDriver(withVals, rows, groupCols, vals, sums.map(_._2), indexCol,
+          countCol, outCols)
+      case None =>
+        ranged(withVals, groupCols, order, vals, sums.map(_._2), indexCol,
+          countCol, outCols, numPartitions)
+    }
+  }
+
+  private def quoted(name: String): Column =
+    col("`" + name.replace("`", "``") + "`")
+
+  /** Group key of a collected row, compared the way Spark groups: binary
+    * by content, -0.0 as 0.0, every NaN equal. */
+  private def groupKey(r: Row, pos: Seq[Int]): Seq[Any] = pos.map { i =>
+    r.get(i) match {
+      case b: Array[Byte] => b.toSeq
+      case d: Double => if (d.isNaN) "NaN" else if (d == 0.0) 0.0 else d
+      case f: Float => if (f.isNaN) "NaN" else if (f == 0.0f) 0.0f else f
+      case v => v
+    }
+  }
+
+  /** Driver path: `rows` are sorted by (groupCols ++ order). */
+  private def onDriver(withVals: DataFrame, rows: Array[Row],
+      groupCols: Seq[String], vals: Seq[String], sumNames: Seq[String],
+      indexCol: Option[String], countCol: Option[String],
+      outCols: Seq[String]): Running = {
+    val schema = withVals.schema
+    val gPos = groupCols.map(schema.fieldIndex)
+    val vPos = vals.map(schema.fieldIndex)
+    val basePos = outCols.take(outCols.length - sumNames.length -
+      indexCol.size - countCol.size).map(schema.fieldIndex)
+    val n = rows.length
+    val totals = new Array[Long](vals.length)
+    val out = new Array[Row](n)
+    var start = 0
+    while (start < n) {
+      val key = groupKey(rows(start), gPos)
+      var end = start + 1
+      while (end < n && groupKey(rows(end), gPos) == key) end += 1
+      val acc = new Array[Long](vals.length)
+      var i = start
+      while (i < end) {
+        val r = rows(i)
+        out(i) = Row.fromSeq(basePos.map(r.get) ++ acc.toSeq ++
+          indexCol.map(_ => (i - start + 1).toLong) ++
+          countCol.map(_ => (end - start).toLong))
+        vPos.indices.foreach { j => acc(j) += r.getLong(vPos(j)) }
+        i += 1
+      }
+      vPos.indices.foreach { j => totals(j) += acc(j) }
+      start = end
+    }
+    val fields = basePos.map(schema.fields) ++
+      sumNames.map(StructField(_, LongType)) ++
+      (indexCol ++ countCol).map(StructField(_, LongType, nullable = false))
+    val spark = withVals.sparkSession
+    val frame = spark.createDataFrame(
+      java.util.Arrays.asList(out: _*), StructType(fields))
+    Running(frame, totals, n.toLong, () => ())
+  }
+
+  /** Ranged path over `input` as given (the gate has released its
+    * cache). */
+  private def ranged(input: DataFrame,
+      groupCols: Seq[String], order: Seq[Column], vals: Seq[String],
+      sumNames: Seq[String], indexCol: Option[String],
+      countCol: Option[String], outCols: Seq[String],
+      numPartitions: Int): Running = {
+    val spark = input.sparkSession
     val parts = if (numPartitions > 0) numPartitions
       else spark.sessionState.conf.numShufflePartitions
-    val ranged = df
-      .repartitionByRange(parts, (groupCols.map(col) ++ order): _*).cache()
+    val ranged = input
+      .repartitionByRange(parts, (groupCols.map(quoted) ++ order): _*).cache()
     val withPid = ranged.withColumn("__pid", spark_partition_id())
-    val countsDf = withPid
-      .groupBy(col("__pid") +: groupCols.map(col): _*)
-      .agg(count(lit(1)).as("__c"))
-    val rows = countsDf.collect()
-    val gIdx = 1 to groupCols.length
-    // per-group offsets in partition order + per-group totals
-    val byGroup = rows.groupBy(r => gIdx.map(r.get).toList)
-    val offs = byGroup.toSeq.flatMap { case (_, rs) =>
+    val keyCols = col("__pid") +: groupCols.map(quoted)
+    val aggs = count(lit(1)).as("__c") +: vals.map(v => sum(v).as(v))
+    val countsDf = withPid.groupBy(keyCols: _*).agg(aggs.head, aggs.tail: _*)
+    val counted = countsDf.collect()
+    // per-group offsets in partition order, plus the per-group row count
+    val g = groupCols.length
+    val cPos = 1 + g
+    val byGroup = counted.groupBy(r => groupKey(r, 1 to g)).values.toSeq
+    val offRows = byGroup.flatMap { rs =>
       val sorted = rs.sortBy(_.getInt(0))
-      val cum = sorted.map(_.getLong(gIdx.last + 1)).scanLeft(0L)(_ + _)
-      sorted.zip(cum).map { case (r, off) =>
-        org.apache.spark.sql.Row.fromSeq(r.toSeq.init ++ Seq(off)) }
+      val offs = (0 to vals.length).map(j =>
+        sorted.map(_.getLong(cPos + j)).scanLeft(0L)(_ + _))
+      sorted.indices.map { i =>
+        Row.fromSeq(sorted(i).toSeq.take(cPos) ++ offs.map(_(i)) :+
+          offs(0).last)
+      }
     }
-    val tots = byGroup.toSeq.map { case (g, rs) =>
-      org.apache.spark.sql.Row.fromSeq(
-        g ++ Seq(rs.map(_.getLong(gIdx.last + 1)).sum)) }
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val gFields = countsDf.schema.fields.slice(1, gIdx.last + 1)
-    val offDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(offs, 1),
-      StructType(countsDf.schema.fields(0) +: gFields :+
-        StructField("__off", LongType)))
-    val totDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(tots, 1),
-      StructType(gFields :+ StructField(countCol, LongType)))
-    val w = Window.partitionBy(col("__pid") +: groupCols.map(col): _*)
-      .orderBy(order: _*)
-    withPid
-      .join(broadcast(offDf), "__pid" +: groupCols)
-      .withColumn(indexCol,
-        row_number().over(w).cast("long") + coalesce(col("__off"), lit(0L)))
-      .join(broadcast(totDf), groupCols)
-      .drop("__pid", "__off")
+    val n = counted.map(_.getLong(cPos)).sum
+    val totals = vals.indices.map(j =>
+      counted.map(_.getLong(cPos + 1 + j)).sum).toArray
+    val keyFields = countsDf.schema.fields.take(cPos)
+    // a local relation: broadcasting it runs no job
+    val offDf = spark.createDataFrame(java.util.Arrays.asList(offRows: _*),
+      StructType(
+        keyFields.zipWithIndex.map { case (f, i) => f.copy(name = s"__o$i") } ++
+          (0 to vals.length).map(j => StructField(s"__off$j", LongType)) :+
+          StructField("__gcnt", LongType)))
+    // null-safe on the group keys: a NULL group is a group like any other
+    val cond = (col("__pid") === col("__o0")) +:
+      groupCols.zipWithIndex.map { case (c, i) =>
+        quoted(c) <=> col(s"__o${i + 1}") }
+    val joined = withPid.join(broadcast(offDf), cond.reduce(_ && _))
+    val wRows = Window.partitionBy(keyCols: _*).orderBy(order: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val withSums = vals.zip(sumNames).zipWithIndex.foldLeft(joined) {
+      case (acc, ((v, name), j)) =>
+        acc.withColumn(name, sum(v).over(wRows) - col(v) + col(s"__off${j + 1}"))
+    }
+    val withIdx = indexCol.foldLeft(withSums) { (acc, name) =>
+      acc.withColumn(name,
+        row_number().over(Window.partitionBy(keyCols: _*).orderBy(order: _*))
+          .cast("long") + coalesce(col("__off0"), lit(0L)))
+    }
+    val out = countCol.foldLeft(withIdx) { (acc, name) =>
+      acc.withColumn(name, col("__gcnt")) }
+    Running(out.select(outCols.map(quoted): _*), totals, n,
+      () => { ranged.unpersist(blocking = false); () })
   }
 }

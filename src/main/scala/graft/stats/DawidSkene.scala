@@ -63,9 +63,13 @@ object DawidSkene {
     // integral ops the distributed plan runs in decimal(38,0)), and the
     // consensus attaches back by one broadcast join. The gate MEASURES the
     // tuple count (free-text rater labels could make it data-sized); past
-    // it, the original per-sweep loop below runs unchanged.
+    // it, the original per-sweep loop below runs unchanged. Labels are
+    // compared as strings on both paths (a non-string rater column reads
+    // as its string form), and a null label is an out-of-class vote on
+    // both: it feeds the first M-step through the vote-share init, and the
+    // item drops out of the E-step and the output.
     val combos = wide
-      .groupBy(raterCols.map(col): _*)
+      .groupBy(raterCols.map(label): _*)
       .agg(count(lit(1)).as("__cnt"))
       .limit(maxCombos + 1).collect()
     if (combos.length <= maxCombos)
@@ -74,6 +78,9 @@ object DawidSkene {
           row.getLong(raterCols.length)))
     else fitDistributed(wide, itemCol, raterCols, classes, iters)
   }
+
+  /** A rater column as the string label both fit paths compare. */
+  private def label(c: String): Column = col(c).cast("string").as(c)
 
   /** Driver-side EM over (rater-label tuple, count) rows — bit-exact
     * replica of [[fitDistributed]]'s integer recursion (all BigInt; the
@@ -169,7 +176,7 @@ object DawidSkene {
       spark.sparkContext.parallelize(consensus.map { case (ys, c, tv) =>
         org.apache.spark.sql.Row.fromSeq(ys ++ Seq(c, tv)) }, 1), schema)
     val cond = raterCols.zipWithIndex.map { case (rc, j) =>
-      wide(rc) === comboDf(s"__y$j") }.reduce(_ && _)
+      wide(rc).cast("string") === comboDf(s"__y$j") }.reduce(_ && _)
     wide.join(broadcast(comboDf), cond)
       .select(col(itemCol), col("label"), col("conf_micro"))
   }
@@ -189,7 +196,8 @@ object DawidSkene {
     // expressions upstream recompute per ACTION — measured 18.1 s → the
     // persisted fit at sf0.1 (TimeOne warm)
     val w = wide.select((col(itemCol).as("__i") +:
-      raterCols.zipWithIndex.map { case (c, j) => col(c).as(s"__y$j") }): _*)
+      raterCols.zipWithIndex.map { case (c, j) =>
+        label(c).as(s"__y$j") }): _*)
       .persist()
 
     // posterior init: vote shares floored to micro

@@ -1,9 +1,10 @@
 package graft.stats
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
 
 /** Multiple-testing-controlled drift sweep: every group (source, shard,
   * language) is KS-tested against the REST of the corpus, and the
@@ -44,16 +45,21 @@ object FdrSweep {
     // r16 (guide §2.2): rank, m, and the bottom-up running min formerly
     // ran through single-partition `Window.orderBy` funnels — m is the
     // test-family size (per-group sweeps keep it a monitoring axis, but a
-    // family keyed on a data-derived axis grows with data). Now: rank =
-    // the two-pass GlobalIndex over the (p_micro, id) total order; m = a
-    // broadcast 1-row count; the step-up's suffix min = a partition-local
-    // bottom-up window plus the collected min-of-following-partitions,
-    // all on one range-partitioned cache.
+    // family keyed on a data-derived axis grows with data). A family under
+    // the GlobalIndex measured-size gate (the usual case: one test per
+    // group) folds on the driver; past it: rank = the two-pass GlobalIndex
+    // over the (p_micro, id) total order; m = a broadcast 1-row count; the
+    // step-up's suffix min = a partition-local bottom-up window plus the
+    // collected min-of-following-partitions, all on one range-partitioned
+    // cache.
+    val order = Seq(col("p_micro"), col(idCol))
+    val sorted =
+      graft.etl.GlobalIndex.sortedIfSmall("FdrSweep.bhStepUp", tests, order)
+    if (sorted.isDefined) return bhOnDriver(tests, sorted.get, alphaMicro)
     val spark = tests.sparkSession
     import spark.implicits._
     val parts = spark.sessionState.conf.numShufflePartitions
-    val ranged = tests
-      .repartitionByRange(parts, col("p_micro"), col(idCol)).cache()
+    val ranged = tests.repartitionByRange(parts, order: _*).cache()
     val withPid = ranged.withColumn("__pid", spark_partition_id())
     val counts = withPid.groupBy("__pid").agg(count(lit(1)).as("c"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
@@ -94,6 +100,35 @@ object FdrSweep {
       .withColumn("rejected",
         col("jmax").isNotNull && col("rank") <= col("jmax"))
       .drop("jmax", "__pid", "__off", "__term", "__suf")
+  }
+
+  /** [[bhStepUp]]'s driver path over the family sorted by (p_micro, id):
+    * the same integers as the ranged plan — rank = position, term =
+    * p·m div rank, p_adj = min(1e6, suffix min of the non-null terms),
+    * rejected = rank ≤ the BH frontier. */
+  private def bhOnDriver(tests: DataFrame, rows: Array[Row],
+      alphaMicro: Long): DataFrame = {
+    val pPos = tests.schema.fieldIndex("p_micro")
+    val m = rows.length.toLong
+    val p = rows.map(r =>
+      if (r.isNullAt(pPos)) None else Some(r.getAs[Number](pPos).longValue))
+    val term = p.zipWithIndex.map { case (pv, i) => pv.map(_ * m / (i + 1)) }
+    val sufMin = term.scanRight(Long.MaxValue) { (t, acc) =>
+      t.fold(acc)(math.min(_, acc)) }
+    val jmax = p.zipWithIndex.collect {
+      case (Some(pv), i) if pv * m <= (i + 1) * alphaMicro => i + 1L }
+      .maxOption
+    val out = rows.indices.map { i =>
+      val rank = i + 1L
+      Row.fromSeq(rows(i).toSeq ++ Seq(rank, m,
+        math.min(1000000L, sufMin(i)), jmax.exists(rank <= _)))
+    }
+    tests.sparkSession.createDataFrame(java.util.Arrays.asList(out: _*),
+      StructType(tests.schema.fields ++ Seq(
+        StructField("rank", LongType, nullable = false),
+        StructField("m", LongType, nullable = false),
+        StructField("p_adj_micro", LongType),
+        StructField("rejected", BooleanType))))
   }
 
   /** Per-group two-sample KS against the rest of the corpus, as exact

@@ -1,9 +1,10 @@
 package graft.stats
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Wasserstein-1 (earth-mover) drift distance, one-vs-rest per group
   * (Monge 1781/Kantorovich 1942 form; for 1-D empirical distributions
@@ -37,39 +38,21 @@ object Wasserstein {
     val cells = base.groupBy("__g", "__v").agg(count(lit(1)).as("cgv"))
     // r16 (guide §2.2): cumAll and the lead-gap formerly ran through a
     // single-partition `Window.orderBy(__v)` — one row per DISTINCT VALUE,
-    // unbounded for wide integer domains. The two-pass GlobalIndex scheme
-    // computes both from ONE range-partitioned cache: partition-local
-    // windows plus a collected per-partition (sum, first-value) table —
-    // the cumulative sum gets the preceding partitions' total, the gap's
-    // lead() gets the NEXT partition's first value for each partition's
-    // last row (the global last row keeps gap 0, as before).
+    // unbounded for wide integer domains. Under the GlobalIndex
+    // measured-size gate both fold on the driver over the sorted value
+    // cells. Past it, the two-pass GlobalIndex scheme computes both from
+    // ONE range-partitioned cache: partition-local windows plus a
+    // collected per-partition (sum, first-value) table — the cumulative
+    // sum gets the preceding partitions' total, the gap's lead() gets the
+    // NEXT partition's first value for each partition's last row (the
+    // global last row keeps gap 0, as before).
     val spark = rows.sparkSession
-    import spark.implicits._
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val ranged = cells.groupBy("__v").agg(sum("cgv").as("cv"))
-      .repartitionByRange(parts, col("__v")).cache()
-    val withPid = ranged.withColumn("__pid", spark_partition_id())
-    val pidStats = withPid.groupBy("__pid")
-      .agg(sum("cv").as("s"), min("__v").as("mn"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1)
-    val offsets = pidStats.map(_._2).scanLeft(0L)(_ + _).init
-    val nextFirst: Seq[(Int, Option[Long])] = pidStats.indices.map { i =>
-      pidStats(i)._1 -> (if (i + 1 < pidStats.length)
-        Some(pidStats(i + 1)._3) else None) }
-    val offDf = pidStats.map(_._1).zip(offsets).zip(nextFirst.map(_._2))
-      .map { case ((pid, off), nf) =>
-        (pid, off, nf.map(java.lang.Long.valueOf).orNull) }
-      .toSeq.toDF("__pid", "__off", "__nextFirst")
-    val wv = Window.partitionBy("__pid").orderBy("__v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wl = Window.partitionBy("__pid").orderBy("__v")
-    val vglob = withPid.join(broadcast(offDf), Seq("__pid"))
-      .withColumn("cumAll", sum("cv").over(wv) + col("__off"))
-      .withColumn("gap",
-        coalesce(coalesce(lead("__v", 1).over(wl), col("__nextFirst"))
-          - col("__v"), lit(0L)))
-      .select("__v", "cumAll", "gap")
+    val vcells = cells.groupBy("__v").agg(sum("cgv").as("cv"))
+    val vglob = graft.etl.GlobalIndex.sortedIfSmall(
+        "Wasserstein.oneVsRest", vcells, Seq(col("__v"))) match {
+      case Some(sorted) => valueGridOnDriver(spark, sorted)
+      case None => valueGridRanged(vcells)
+    }
     val groups = cells.groupBy("__g").agg(sum("cgv").as("ng"))
     val nAll = cells.agg(sum("cgv").as("nn"))
     // evaluation grid: every group at every global distinct value —
@@ -94,6 +77,53 @@ object Wasserstein {
           .otherwise(expr("cast((w1num * 1000000) div (n_g * n_rest) as long)"))
           .as("w1_micro"))
       .orderBy("g")
+  }
+
+  /** (__v, cumAll, gap) over the (__v, cv) value cells sorted by __v: the
+    * inclusive running count and the gap to the next value (0 for the
+    * last value and next to a null value). */
+  private def valueGridOnDriver(spark: SparkSession, sorted: Array[Row])
+      : DataFrame = {
+    val v = sorted.map(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
+    val cum = sorted.map(_.getLong(1)).scanLeft(0L)(_ + _).tail
+    val out = sorted.indices.map { i =>
+      val gap = if (i + 1 < v.length) v(i).zip(v(i + 1))
+        .map { case (a, b) => b - a }.getOrElse(0L) else 0L
+      Row(v(i).map(java.lang.Long.valueOf).orNull, cum(i), gap)
+    }
+    spark.createDataFrame(java.util.Arrays.asList(out: _*), StructType(Seq(
+      StructField("__v", LongType), StructField("cumAll", LongType),
+      StructField("gap", LongType, nullable = false))))
+  }
+
+  /** [[valueGridOnDriver]]'s ranged twin over the (__v, cv) cells. */
+  private def valueGridRanged(vcells: DataFrame): DataFrame = {
+    val spark = vcells.sparkSession
+    import spark.implicits._
+    val parts = spark.sessionState.conf.numShufflePartitions
+    val ranged = vcells.repartitionByRange(parts, col("__v")).cache()
+    val withPid = ranged.withColumn("__pid", spark_partition_id())
+    val pidStats = withPid.groupBy("__pid")
+      .agg(sum("cv").as("s"), min("__v").as("mn"))
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
+      .sortBy(_._1)
+    val offsets = pidStats.map(_._2).scanLeft(0L)(_ + _).init
+    val nextFirst: Seq[(Int, Option[Long])] = pidStats.indices.map { i =>
+      pidStats(i)._1 -> (if (i + 1 < pidStats.length)
+        Some(pidStats(i + 1)._3) else None) }
+    val offDf = pidStats.map(_._1).zip(offsets).zip(nextFirst.map(_._2))
+      .map { case ((pid, off), nf) =>
+        (pid, off, nf.map(java.lang.Long.valueOf).orNull) }
+      .toSeq.toDF("__pid", "__off", "__nextFirst")
+    val wv = Window.partitionBy("__pid").orderBy("__v")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val wl = Window.partitionBy("__pid").orderBy("__v")
+    withPid.join(broadcast(offDf), Seq("__pid"))
+      .withColumn("cumAll", sum("cv").over(wv) + col("__off"))
+      .withColumn("gap",
+        coalesce(coalesce(lead("__v", 1).over(wl), col("__nextFirst"))
+          - col("__v"), lit(0L)))
+      .select("__v", "cumAll", "gap")
   }
 
   /** q_m78_wasserstein: how far each source's document-length

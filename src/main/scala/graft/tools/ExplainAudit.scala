@@ -18,6 +18,9 @@ object ExplainAudit {
       // audit-only: AQE's unexecuted formatted plans omit codegen ids;
       // production sessions (Verify/Bench) keep AQE on
       .config("spark.sql.adaptive.enabled", "false")
+      // audit the plans that run at scale: the GlobalIndex measured-size
+      // gate would put every sf0.001 ranged frame on the driver path
+      .config(graft.etl.GlobalIndex.ForceDistributedConf, "true")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.001"
@@ -1754,6 +1757,20 @@ object ExplainAudit {
     // with nothing to assert). The probe-side plan shape it rides —
     // manifest pruning + the probeIvf nProbe-list equi-join — is pinned
     // by q_s_ivf_append's audit and VersionedIvfSpec.
+
+    // the one gate-on audit: at sf0.001 both of q_m52_km's GlobalIndex
+    // calls take the driver path, so the two-pass range exchanges and
+    // every single-partition exchange are gone; the one range exchange
+    // left is the query's own output orderBy("t")
+    spark.conf.set(graft.etl.GlobalIndex.ForceDistributedConf, "false")
+    try audit("q_m52_km",
+      "gate on: the GlobalIndex frames are local" ->
+        (_.contains("LocalTableScan")),
+      "gate on: no range exchange but the output sort's" ->
+        (p => "rangepartitioning\\(".r.findAllIn(p).size == 1),
+      "gate on: no single-partition exchange" ->
+        (p => !p.contains("SinglePartition")))
+    finally spark.conf.set(graft.etl.GlobalIndex.ForceDistributedConf, "true")
 
     if (failures.nonEmpty) {
       System.err.println("\nPLAN AUDIT FAILURES:\n" + failures.mkString("\n"))

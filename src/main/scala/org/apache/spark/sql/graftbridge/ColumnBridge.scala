@@ -27,3 +27,27 @@ object DatasetBridge {
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
 }
+
+/** The session's cache entries, for measured-size gates: whether a
+  * frame's plan is cached, and its cached rows and bytes once filled. */
+object CacheBridge {
+  private def entry(df: org.apache.spark.sql.DataFrame) = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
+  }
+
+  def isCached(df: org.apache.spark.sql.DataFrame): Boolean =
+    entry(df).isDefined
+
+  /** Fills the cache serving `df` (which must be cached) with ONE job — a
+    * row count over its cached batches, no shuffle — and returns (rows,
+    * cached bytes) as the cache measured them. */
+  def fill(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
+    val cache = entry(df).getOrElse(
+      throw new IllegalArgumentException("frame is not cached"))
+      .cachedRepresentation.cacheBuilder
+    val rows = cache.cachedColumnBuffers
+      .map(_.numRows.toLong).fold(0L)(_ + _)
+    (rows, cache.sizeInBytesStats.value.longValue)
+  }
+}

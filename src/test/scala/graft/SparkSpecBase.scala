@@ -15,4 +15,24 @@ trait SparkSpecBase extends AnyFunSuite {
     .getOrCreate()
 
   lazy val sf: String = "/root/testdata/sf0.001"
+
+  /** Runs `body` with the GlobalIndex measured-size gate skipped
+    * (`forceDistributed = true`: the ranged plans that run at scale) or
+    * taken (`false`, the default), restoring the session conf after. */
+  def withGate[T](forceDistributed: Boolean)(body: => T): T = {
+    val key = graft.etl.GlobalIndex.ForceDistributedConf
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, forceDistributed.toString)
+    try body
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** `body` on both sides of the gate: (driver path, ranged path). */
+  def bothGateModes[T](body: => T): (T, T) = {
+    val onDriver = withGate(forceDistributed = false)(body)
+    spark.catalog.clearCache()
+    val ranged = withGate(forceDistributed = true)(body)
+    spark.catalog.clearCache()
+    (onDriver, ranged)
+  }
 }

@@ -89,4 +89,24 @@ class DawidSkeneSpec extends SparkSpecBase {
       dump(DawidSkene.fitGated(wide, "item", Seq("r1", "r2", "r3"),
         classes3, iters = 5, maxCombos = 0)))
   }
+
+  test("integer and null labels: the combo path equals the distributed loop") {
+    // non-string rater columns read as their string form on both paths;
+    // a null label is an out-of-class vote on both (its item drops out)
+    def lab(v: Int): Integer = if (v < 0) null else Integer.valueOf(v)
+    val rows = Seq((1L, 1, 1, 2), (2L, 2, 2, 1), (3L, 1, 2, 1),
+      (4L, 2, 1, 2), (5L, 1, -1, 2), (6L, 1, 1, 1), (7L, 2, 2, 2),
+      (8L, -1, -1, 1), (9L, 2, 1, 1), (10L, 1, 2, 2))
+      .map { case (i, a, b, c) => (i, lab(a), lab(b), lab(c)) }
+    val wide = rows.toDF("item", "r1", "r2", "r3")
+    val classesInt = Seq("1", "2")
+    def dump(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("item").collect().map(_.toSeq).toSeq
+    val fast = dump(DawidSkene.fit(wide, "item", Seq("r1", "r2", "r3"),
+      classesInt))
+    val slow = dump(DawidSkene.fitGated(wide, "item", Seq("r1", "r2", "r3"),
+      classesInt, iters = 5, maxCombos = 0))
+    assert(fast === slow)
+    assert(fast.map(_.head) === Seq(1L, 2L, 3L, 4L, 6L, 7L, 9L, 10L))
+  }
 }

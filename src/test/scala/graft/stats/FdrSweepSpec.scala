@@ -63,4 +63,47 @@ class FdrSweepSpec extends SparkSpecBase {
     assert(out.forall(!_.getAs[Boolean]("rejected")))
     assert(out.forall(_.getAs[Long]("p_micro") === 1000000L))
   }
+
+  // -- both sides of the GlobalIndex measured-size gate ---------------------
+
+  private def bh(tests: org.apache.spark.sql.DataFrame) =
+    FdrSweep.bhStepUp(tests, "id", 50000L).orderBy("rank").collect()
+      .map(_.toSeq).toSeq
+
+  test("gate parity: BH step-up on the driver equals the ranged plan") {
+    // a family with tied p-values (the id breaks them), a boundary
+    // rejection, and values above the cap's reach
+    val tests = (1 to 400).map(i =>
+      ("t%03d".format(i), (i * 7919 % 400).toLong * 250L)).toDF("id", "p_micro")
+    val (a, b) = bothGateModes(bh(tests))
+    assert(a === b)
+    assert(a.length === 400)
+    assert(a.map(_(2)) === (1L to 400L))
+  }
+
+  test("gate parity: the KS sweep and an empty family") {
+    val rows = (1 to 60).map(i => ("A", (i % 10).toLong)) ++
+      (1 to 60).map(i => ("B", (i % 12).toLong)) ++
+      (1 to 5).map(i => ("C", 1000L + i))
+    val (a, b) = bothGateModes(FdrSweep.bhStepUp(
+      FdrSweep.ksRestSweep(rows.toDF("g", "v"), "g", "v"), "g", 50000L)
+      .orderBy("rank").collect().map(_.toSeq).toSeq)
+    assert(a === b)
+    val (e1, e2) = bothGateModes(bh(Seq.empty[(String, Long)]
+      .toDF("id", "p_micro")))
+    assert(e1.isEmpty && e2.isEmpty)
+  }
+
+  test("a gated BH pass leaves no cache and no range exchange") {
+    val tests = Seq(("t1", 5000L), ("t2", 11000L), ("t3", 20000L))
+      .toDF("id", "p_micro")
+    withGate(forceDistributed = false) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val out = FdrSweep.bhStepUp(tests, "id", 50000L)
+      assert(!out.queryExecution.executedPlan.toString
+        .contains("rangepartitioning"))
+      out.collect()
+      assert(spark.sparkContext.getPersistentRDDs.keySet === before)
+    }
+  }
 }

@@ -49,4 +49,32 @@ class WassersteinSpec extends SparkSpecBase {
     val m = w1("a" -> 1L, "a" -> 2L)
     assert(m("a") === None)
   }
+
+  // -- both sides of the GlobalIndex measured-size gate ---------------------
+
+  test("gate parity: driver-side value grid equals the ranged plan") {
+    val rows = (0 until 900).map(i =>
+      ("g" + (i % 3), ((i * 7919) % 300 + (i % 3) * 17).toLong))
+    val (a, b) = bothGateModes(Wasserstein.oneVsRest(
+      rows.toDF("g", "v"), "g", "v").collect().map(_.toSeq).toSeq)
+    assert(a === b)
+    assert(a.map(_.head) === Seq("g0", "g1", "g2"))
+    val (e1, e2) = bothGateModes(Wasserstein.oneVsRest(
+      Seq.empty[(String, Long)].toDF("g", "v"), "g", "v").collect().toSeq)
+    assert(e1.isEmpty && e2.isEmpty)
+  }
+
+  test("a gated W1 leaves no cache and no range exchange") {
+    withGate(forceDistributed = false) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val out = Wasserstein.oneVsRest(
+        Seq("a" -> 0L, "a" -> 10L, "b" -> 5L).toDF("g", "v"), "g", "v")
+      // the output's own orderBy("g") range-sorts the k result rows; the
+      // value grid itself must not range-partition
+      assert(!out.queryExecution.executedPlan.toString
+        .contains("rangepartitioning(__v"))
+      out.collect()
+      assert(spark.sparkContext.getPersistentRDDs.keySet === before)
+    }
+  }
 }
