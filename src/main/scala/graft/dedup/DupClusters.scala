@@ -25,6 +25,11 @@ import org.apache.spark.sql.functions._
   */
 object DupClusters {
 
+  /** Directed-edge bound of [[connectedComponents]]'s driver path (2^20;
+    * at the default 10 MB broadcast threshold the gate's byte budget binds
+    * first, at ~437k pairs of 24-byte UnsafeRows). */
+  val MaxDriverEdges: Long = 1L << 20
+
   /** Connected components of an undirected pair list (ida, idb) → one row
     * per node appearing in any pair: (id, comp) with comp = the smallest
     * node id reachable from `id`. An empty pair list yields an empty frame
@@ -49,8 +54,7 @@ object DupClusters {
     * cannot clean them up itself. The default (local) is right for
     * single-JVM runs and tests. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
-      checkpointDir: Option[String] = None,
-      smallGraphEdges: Long = 1L << 20): DataFrame = {
+      checkpointDir: Option[String] = None): DataFrame = {
     checkpointDir.foreach(pairs.sparkSession.sparkContext.setCheckpointDir)
     val roundCaches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     // Checkpoint each round, then RE-WRAP the result as a fresh LogicalRDD
@@ -84,26 +88,16 @@ object DupClusters {
       }
     val fwd = pairs.select(col("ida").cast("long").as("a"),
       col("idb").cast("long").as("b"))
-    // no distinct: MIN-propagation is duplicate-insensitive, so repeated
-    // edges cost a few joined rows but never a correctness bit — and the
-    // dedup would be a full extra shuffle of the edge list
-    val edges = fwd.union(fwd.select(col("b").as("a"), col("a").as("b")))
-      .cache()
     // r15 size-adaptive fast path (the AQE broadcast-threshold analogue,
-    // decided from the MEASURED edge count, never a local[*] constant):
-    // a confirmed-duplicate edge list below `smallGraphEdges` rows
-    // (default 2^20 ≈ 16 MB collected — the same order a broadcast
-    // relation would ship) closes on the driver with union-find +
-    // path compression in O(E α(E)), IDENTICAL min-label result,
-    // instead of paying O(log diameter) rounds × two shuffle joins ×
-    // per-round checkpoint jobs. The distributed loop below is
-    // untouched and takes over past the threshold (pass 0 to force it;
-    // DupClustersSpec pins small-path ≡ loop equality). The count is
-    // one job that also materializes the edge cache the loop would
-    // build anyway.
-    if (edges.count() <= smallGraphEdges) {
-      val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      edges.unpersist(blocking = false)
+    // decided by graft.DriverGate from the MEASURED pair list): a graph of
+    // at most MaxDriverEdges directed edges (two per pair) closes on the
+    // driver with union-find + path compression in O(E α(E)), IDENTICAL
+    // min-label result, instead of paying O(log diameter) rounds × two
+    // shuffle joins × per-round checkpoint jobs. The distributed loop below
+    // is untouched past the gate (DupClustersSpec pins small-path ≡ loop).
+    val small = graft.DriverGate.rows("DupClusters.connectedComponents",
+      fwd, MaxDriverEdges / 2)
+    if (small.isDefined) {
       // union-find where union always roots at the SMALLER id, so a
       // component's final root IS its minimum — the loop's min-label
       // fixpoint — and find() alone yields comp
@@ -117,7 +111,8 @@ object DupClusters {
         }
         r
       }
-      es.foreach { case (a, b) =>
+      small.get.foreach { row =>
+        val a = row.getLong(0); val b = row.getLong(1)
         if (!parent.containsKey(a)) parent.put(a, a)
         if (!parent.containsKey(b)) parent.put(b, b)
         val ra = find(a); val rb = find(b)
@@ -130,6 +125,12 @@ object DupClusters {
       import sp.implicits._
       return assign.toDF("id", "comp")
     }
+    // no distinct: MIN-propagation is duplicate-insensitive, so repeated
+    // edges cost a few joined rows but never a correctness bit — and the
+    // dedup would be a full extra shuffle of the edge list. Cached for the
+    // loop's rounds.
+    val edges = fwd.union(fwd.select(col("b").as("a"), col("a").as("b")))
+      .cache()
     // localCheckpoint (not cache) each round: an iterative self-joining
     // DataFrame otherwise DOUBLES its logical plan per iteration — caching
     // short-circuits execution but the analyzer still walks the whole

@@ -1,9 +1,8 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.CacheBridge
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Distributed global row index over a total order — the scalable encoding
@@ -15,18 +14,16 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * [[withGlobalCumsumReleasable]], [[withGlobalRunning]],
   * [[withGroupedIndex]]) is one core: per group (none for the global
   * forms) a 1-based rank, EXCLUSIVE prefix sums and the totals, over the
-  * order `groupCols ++ order`. The core first passes the measured-size
-  * gate ([[sortedIfSmall]]): it caches the input and counts it in one job,
-  * and releases that cache before either path's result is built.
+  * order `groupCols ++ order`, behind [[graft.DriverGate]]:
   *
-  *  - Driver path: at most [[MaxDriverRows]] rows AND a cached size of at
-  *    most `spark.sql.autoBroadcastJoinThreshold` bytes. One
-  *    `orderBy(order).limit(n).collect()` takes the sorted rows, the ranks
-  *    and prefix sums fold on the driver, and the result is a local frame
-  *    with the same columns and types.
-  *    Distinct-value cell frames (a few hundred rows) always land here.
-  *  - Ranged path (past either bound), on the input as given: the
-  *    two-pass scheme, the classic zipWithIndex shape in DataFrame ops —
+  *  - Driver path: at most [[MaxDriverRows]] rows within the gate's byte
+  *    budget. The gate returns the rows sorted, the ranks and prefix sums
+  *    fold on the driver, and the result is a local frame with the same
+  *    columns and types. Distinct-value cell frames (a few hundred rows)
+  *    always land here.
+  *  - Ranged path (past the gate, or under its force-distributed conf),
+  *    on the input as given: the two-pass scheme, the classic
+  *    zipWithIndex shape in DataFrame ops —
   *     1. range-repartition on the order columns, so partition i holds
   *        keys strictly below partition i+1;
   *     2. one tiny job collects per-(partition, group) counts and sums →
@@ -39,12 +36,6 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *    final plan see identical partition boundaries (RangePartitioner
   *    samples).
   *
-  * The session conf [[ForceDistributedConf]]
-  * (`spark.graft.gate.forceDistributed`, default false; a `-D` system
-  * property sets it too) skips the gate and runs the ranged path on the
-  * input as given — the plans a 100 TB run takes, which ExplainAudit and
-  * the parity specs keep checking.
-  *
   * `order` must be a TOTAL order (unique keys) on BOTH paths: ties take
   * arbitrary ranks (on the ranged path they may even straddle range
   * boundaries), exactly as they do for a global row_number, so the two
@@ -52,52 +43,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   */
 object GlobalIndex {
 
-  /** Session conf: `true` skips the measured-size gate everywhere. */
-  val ForceDistributedConf = "spark.graft.gate.forceDistributed"
-
-  /** Row bound of the driver path (the byte bound is the session's
-    * `spark.sql.autoBroadcastJoinThreshold`). */
+  /** Row bound of the driver path, shared with FdrSweep and Wasserstein
+    * (the byte bound is [[graft.DriverGate]]'s). */
   val MaxDriverRows: Long = 1L << 16
-
-  private def forceDistributed(spark: SparkSession): Boolean =
-    spark.conf.getOption(ForceDistributedConf).exists(_.trim.toBoolean)
-
-  /** Every gate decision logs here at INFO (`<op> path=driver|ranged|forced
-    * rows=… bytes=…`); the shipped log4j2.properties keeps it at WARN. */
-  private val gateLog = org.slf4j.LoggerFactory.getLogger("graft.gate")
-
-  /** The measured-size gate shared by the GlobalIndex core and the inline
-    * two-pass copies (FdrSweep, Wasserstein). Caches `df` (unless the
-    * caller already did) and fills the cache with one job that counts its
-    * rows. Small frame — at most [[MaxDriverRows]] rows and at most
-    * `autoBroadcastJoinThreshold` cached bytes: `Some(rows sorted by
-    * order)`. Otherwise `None`: the caller runs its ranged plan on `df` as
-    * given. Either way the gate's cache is released before it returns, so
-    * a large input never sits in the input cache and the range cache at
-    * once (GlobalIndexRangedBench measured that overlap: about twice the
-    * persisted bytes and no faster). Under [[ForceDistributedConf]]:
-    * `None`, without measuring. */
-  private[graft] def sortedIfSmall(op: String, df: DataFrame,
-      order: Seq[Column]): Option[Array[Row]] = {
-    val spark = df.sparkSession
-    if (forceDistributed(spark)) {
-      gateLog.info(s"$op path=forced")
-      return None
-    }
-    val owned = !CacheBridge.isCached(df)
-    val cached = if (owned) df.cache() else df
-    val (rows, bytes) = CacheBridge.fill(cached)
-    val small = rows <= MaxDriverRows &&
-      bytes <= spark.sessionState.conf.autoBroadcastJoinThreshold
-    gateLog.info(
-      s"$op path=${if (small) "driver" else "ranged"} rows=$rows bytes=$bytes")
-    val sorted =
-      if (!small) None
-      else if (rows == 0) Some(Array.empty[Row])
-      else Some(cached.orderBy(order: _*).limit(rows.toInt).collect())
-    if (owned) cached.unpersist(blocking = false)
-    sorted
-  }
 
   /** [[withGlobalIndex]] plus an explicit release handle for the internal
     * range-partitioned cache (the fitReleasable pattern): callers invoke the
@@ -206,7 +154,8 @@ object GlobalIndex {
       added
     val op = if (groupCols.nonEmpty) "GlobalIndex.withGroupedIndex"
       else "GlobalIndex.running"
-    sortedIfSmall(op, withVals, groupCols.map(quoted) ++ order) match {
+    graft.DriverGate.rows(op, withVals, MaxDriverRows,
+        groupCols.map(quoted) ++ order) match {
       case Some(rows) =>
         onDriver(withVals, rows, groupCols, vals, sums.map(_._2), indexCol,
           countCol, outCols)
@@ -270,8 +219,7 @@ object GlobalIndex {
     Running(frame, totals, n.toLong, () => ())
   }
 
-  /** Ranged path over `input` as given (the gate has released its
-    * cache). */
+  /** Ranged path over `input` as given. */
   private def ranged(input: DataFrame,
       groupCols: Seq[String], order: Seq[Column], vals: Seq[String],
       sumNames: Seq[String], indexCol: Option[String],

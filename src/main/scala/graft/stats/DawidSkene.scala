@@ -39,21 +39,18 @@ import org.apache.spark.sql.functions._
   * checkpoint needed. */
 object DawidSkene {
 
+  /** Rater-label tuple bound of [[fit]]'s driver path. */
+  val MaxDriverCombos: Long = 1L << 16
+
   /** Fit over wide assignments (one row per item, one string label
     * column per rater). `classes`: the label universe, explicit so the
     * fit is scale-independent (a level absent at one SF must not
     * change k). Returns (item, label, conf_micro) — the consensus
     * label with its posterior in micro. `iters` EM sweeps after the
-    * vote init. */
+    * vote init. At most [[MaxDriverCombos]] distinct rater-label tuples
+    * within [[graft.DriverGate]]'s byte budget run the EM on the driver. */
   def fit(wide: DataFrame, itemCol: String, raterCols: Seq[String],
-      classes: Seq[String], iters: Int = 5): DataFrame =
-    fitGated(wide, itemCol, raterCols, classes, iters, maxCombos = 1 << 16)
-
-  /** [[fit]] with an explicit fast-path gate (specs force it to 0 to pin
-    * the distributed loop). */
-  private[stats] def fitGated(wide: DataFrame, itemCol: String,
-      raterCols: Seq[String], classes: Seq[String], iters: Int,
-      maxCombos: Int): DataFrame = {
+      classes: Seq[String], iters: Int = 5): DataFrame = {
     // Value-counts fast path (r16, guide §1.2): an item's posterior at
     // every sweep is a function of its rater-label TUPLE alone — the init
     // is its vote shares, and each E-step rescores it from the collected
@@ -62,7 +59,7 @@ object DawidSkene {
     // feeds the ENTIRE EM driver-side in exact BigInt arithmetic (the same
     // integral ops the distributed plan runs in decimal(38,0)), and the
     // consensus attaches back by one broadcast join. The gate MEASURES the
-    // tuple count (free-text rater labels could make it data-sized); past
+    // tuple table (free-text rater labels could make it data-sized); past
     // it, the original per-sweep loop below runs unchanged. Labels are
     // compared as strings on both paths (a non-string rater column reads
     // as its string form), and a null label is an out-of-class vote on
@@ -71,12 +68,13 @@ object DawidSkene {
     val combos = wide
       .groupBy(raterCols.map(label): _*)
       .agg(count(lit(1)).as("__cnt"))
-      .limit(maxCombos + 1).collect()
-    if (combos.length <= maxCombos)
-      fitFromCombos(wide, itemCol, raterCols, classes, iters,
-        combos.map(row => raterCols.indices.map(row.getString).toVector ->
-          row.getLong(raterCols.length)))
-    else fitDistributed(wide, itemCol, raterCols, classes, iters)
+    graft.DriverGate.rows("DawidSkene.fit", combos, MaxDriverCombos) match {
+      case Some(rows) =>
+        fitFromCombos(wide, itemCol, raterCols, classes, iters,
+          rows.map(row => raterCols.indices.map(row.getString).toVector ->
+            row.getLong(raterCols.length)))
+      case None => fitDistributed(wide, itemCol, raterCols, classes, iters)
+    }
   }
 
   /** A rater column as the string label both fit paths compare. */
@@ -91,7 +89,6 @@ object DawidSkene {
       raterCols: Seq[String], classes: Seq[String], iters: Int,
       combos: Array[(Vector[String], Long)]): DataFrame = {
     val spark = wide.sparkSession
-    import spark.implicits._
     val r = raterCols.length
     val k = classes.length
     require(k >= 2 && r >= 1, "dawidSkene: need >= 2 classes, >= 1 rater")
@@ -172,9 +169,10 @@ object DawidSkene {
       raterCols.indices.map(j => StructField(s"__y$j", StringType)) ++
         Seq(StructField("label", StringType),
           StructField("conf_micro", LongType)))
+    // a local relation: broadcasting it runs no job
     val comboDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(consensus.map { case (ys, c, tv) =>
-        org.apache.spark.sql.Row.fromSeq(ys ++ Seq(c, tv)) }, 1), schema)
+      java.util.Arrays.asList(consensus.map { case (ys, c, tv) =>
+        org.apache.spark.sql.Row.fromSeq(ys ++ Seq(c, tv)) }: _*), schema)
     val cond = raterCols.zipWithIndex.map { case (rc, j) =>
       wide(rc).cast("string") === comboDf(s"__y$j") }.reduce(_ && _)
     wide.join(broadcast(comboDf), cond)

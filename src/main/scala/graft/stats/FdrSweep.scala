@@ -45,16 +45,16 @@ object FdrSweep {
     // r16 (guide §2.2): rank, m, and the bottom-up running min formerly
     // ran through single-partition `Window.orderBy` funnels — m is the
     // test-family size (per-group sweeps keep it a monitoring axis, but a
-    // family keyed on a data-derived axis grows with data). A family under
-    // the GlobalIndex measured-size gate (the usual case: one test per
-    // group) folds on the driver; past it: rank = the two-pass GlobalIndex
+    // family keyed on a data-derived axis grows with data). A family within
+    // graft.DriverGate's bounds (the usual case: one test per group) folds
+    // on the driver; past it: rank = the two-pass GlobalIndex
     // over the (p_micro, id) total order; m = a broadcast 1-row count; the
     // step-up's suffix min = a partition-local bottom-up window plus the
     // collected min-of-following-partitions, all on one range-partitioned
     // cache.
     val order = Seq(col("p_micro"), col(idCol))
-    val sorted =
-      graft.etl.GlobalIndex.sortedIfSmall("FdrSweep.bhStepUp", tests, order)
+    val sorted = graft.DriverGate.rows("FdrSweep.bhStepUp", tests,
+      graft.etl.GlobalIndex.MaxDriverRows, order)
     if (sorted.isDefined) return bhOnDriver(tests, sorted.get, alphaMicro)
     val spark = tests.sparkSession
     import spark.implicits._

@@ -38,9 +38,9 @@ object Wasserstein {
     val cells = base.groupBy("__g", "__v").agg(count(lit(1)).as("cgv"))
     // r16 (guide §2.2): cumAll and the lead-gap formerly ran through a
     // single-partition `Window.orderBy(__v)` — one row per DISTINCT VALUE,
-    // unbounded for wide integer domains. Under the GlobalIndex
-    // measured-size gate both fold on the driver over the sorted value
-    // cells. Past it, the two-pass GlobalIndex scheme computes both from
+    // unbounded for wide integer domains. Within graft.DriverGate's bounds
+    // (GlobalIndex's row bound) both fold on the driver over the sorted
+    // value cells. Past it, the two-pass GlobalIndex scheme computes both from
     // ONE range-partitioned cache: partition-local windows plus a
     // collected per-partition (sum, first-value) table — the cumulative
     // sum gets the preceding partitions' total, the gap's lead() gets the
@@ -48,8 +48,8 @@ object Wasserstein {
     // global last row keeps gap 0, as before).
     val spark = rows.sparkSession
     val vcells = cells.groupBy("__v").agg(sum("cgv").as("cv"))
-    val vglob = graft.etl.GlobalIndex.sortedIfSmall(
-        "Wasserstein.oneVsRest", vcells, Seq(col("__v"))) match {
+    val vglob = graft.DriverGate.rows("Wasserstein.oneVsRest", vcells,
+        graft.etl.GlobalIndex.MaxDriverRows, Seq(col("__v"))) match {
       case Some(sorted) => valueGridOnDriver(spark, sorted)
       case None => valueGridRanged(vcells)
     }

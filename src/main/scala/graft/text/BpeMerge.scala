@@ -25,6 +25,9 @@ object BpeMerge {
 
   import TextOps.tokens
 
+  /** Vocabulary (distinct word) bound of [[learnState]]'s driver path. */
+  val MaxDriverVocab: Long = 1L << 20
+
   /** Greedy left-to-right merge of adjacent (x, y) into x||y with a
     * one-symbol lookbehind: `pend` holds the previous symbol until we
     * know whether the current one completes the pair; after a merge the
@@ -95,25 +98,27 @@ object BpeMerge {
     * Driver-local fast path (r16, the [[graft.text.UnigramLm.learnState]]
     * model discipline + the [[graft.dedup.DupClusters]] measured gate):
     * every merge iteration reads and writes ONLY the word-frequency
-    * vocabulary, so when the MEASURED vocab size fits under `maxVocab`
-    * the whole loop runs driver-side — pair counts, the (cnt desc, x, y)
+    * vocabulary, so when [[graft.DriverGate]] measures it within
+    * [[MaxDriverVocab]] words and its byte budget the whole loop runs
+    * driver-side — pair counts, the (cnt desc, x, y)
     * argmax in UTF-8 byte order (Spark's string ordering), and the greedy
     * fold — eliminating the per-merge TakeOrdered job + full-vocab
     * persist/count/unpersist churn (2 jobs + cache turnover per merge).
     * The symbol split stays IN SPARK (`split(w, "")` collected with the
     * vocab) so the driver never re-implements its code-point semantics.
     * Past the gate the original per-merge distributed loop runs
-    * unchanged; at 100 TB a vocabulary above 2²⁰ words keeps it. */
+    * unchanged. */
   private[text] def learnState(docs: DataFrame, textCol: String,
-      nMerges: Int, maxVocab: Int = 1 << 20)
-      : (Seq[(Long, String, String, Long)], DataFrame) = {
+      nMerges: Int): (Seq[(Long, String, String, Long)], DataFrame) = {
     require(nMerges >= 1, "nMerges >= 1")
     val words0 = docs
       .select(explode(tokens(col(textCol))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("freq"))
       .withColumn("syms", split(col("w"), ""))
-    val collected = words0.limit(maxVocab + 1).collect()
-    if (collected.length <= maxVocab) {
+    val gated = graft.DriverGate.rows("BpeMerge.learnState", words0,
+      MaxDriverVocab)
+    if (gated.isDefined) {
+      val collected = gated.get
       var vocab: Array[(String, Long, Array[String])] = collected.map(r =>
         (r.getString(0), r.getLong(1), r.getSeq[String](2).toArray))
       // UTF-8 byte comparison = UTF8String binary ordering = what the
@@ -172,8 +177,8 @@ object BpeMerge {
       }
       val spark = docs.sparkSession
       val out = spark.createDataFrame(
-        spark.sparkContext.parallelize(vocab.toSeq.map { case (w, f, s) =>
-          org.apache.spark.sql.Row(w, f, s.toSeq) }, 1), words0.schema)
+        java.util.Arrays.asList(vocab.toSeq.map { case (w, f, s) =>
+          org.apache.spark.sql.Row(w, f, s.toSeq) }: _*), words0.schema)
       (merges.toSeq, out)
     } else learnStateDistributed(words0, nMerges)
   }

@@ -33,6 +33,9 @@ object QualityClassifier {
   final case class Fit(weights: Array[Double], n: Long, correct: Long,
       pos: Long)
 
+  /** Combo-table row bound of [[fit]]'s driver path. */
+  val MaxDriverCombos: Long = 1L << 20
+
   private def zCol(w: Array[Double], features: Seq[String]): Column =
     features.zipWithIndex.foldLeft(lit(w(0)): Column) {
       case (acc, (f, j)) => acc + lit(w(j + 1)) * col(f)
@@ -52,24 +55,27 @@ object QualityClassifier {
     * keep it far below the gate in practice) and all iterations run
     * driver-side over (combo, count) with the IDENTICAL float-op sequence,
     * so each gradient sum is the exact same integer: Σ_rows term =
-    * Σ_combos count·term. Past the gate the original per-iteration
-    * aggregation loop runs unchanged — at 100 TB the combo table is still
-    * bounded by the quantized feature grid, but the gate decides from a
-    * measurement, never an assumption. */
+    * Σ_combos count·term. The combo table takes the driver path through
+    * [[graft.DriverGate]] (at most [[MaxDriverCombos]] rows within its
+    * byte budget); past it the original per-iteration aggregation loop
+    * runs unchanged — at 100 TB the combo table is still bounded by the
+    * quantized feature grid, but the gate decides from a measurement,
+    * never an assumption. */
   def fit(docs: DataFrame, featureCols: Seq[String], label: Column,
-      iters: Int = 20, lr: Double = 1.0, maxCombos: Int = 1 << 20): Fit = {
+      iters: Int = 20, lr: Double = 1.0): Fit = {
     val d = featureCols.size
     val feats0 = docs.select(
       (label.cast("double").as("y") +: featureCols.map(col)): _*)
-    // one data pass: distinct (y, x) combos with counts; collect bounded
-    // by maxCombos + 1 so the overflow case is detected, never guessed
-    val comboRows = feats0
+    // one data pass: distinct (y, x) combos with counts
+    val combos = feats0
       .groupBy(col("y") +: featureCols.map(col): _*)
       .agg(count(lit(1)).as("__cnt"))
       .select((col("y") +: featureCols.map(c => col(c).cast("double"))) :+
         col("__cnt"): _*)
-      .limit(maxCombos + 1).collect()
-    if (comboRows.length <= maxCombos) {
+    val gated = graft.DriverGate.rows("QualityClassifier.fit", combos,
+      MaxDriverCombos)
+    if (gated.isDefined) {
+      val comboRows = gated.get
       val y = comboRows.map(_.getDouble(0))
       val xs = comboRows.map(r => Array.tabulate(d)(j => r.getDouble(j + 1)))
       val cnt = comboRows.map(_.getLong(d + 1))

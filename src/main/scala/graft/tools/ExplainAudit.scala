@@ -18,9 +18,9 @@ object ExplainAudit {
       // audit-only: AQE's unexecuted formatted plans omit codegen ids;
       // production sessions (Verify/Bench) keep AQE on
       .config("spark.sql.adaptive.enabled", "false")
-      // audit the plans that run at scale: the GlobalIndex measured-size
-      // gate would put every sf0.001 ranged frame on the driver path
-      .config(graft.etl.GlobalIndex.ForceDistributedConf, "true")
+      // audit the plans that run at scale: graft.DriverGate would put
+      // every sf0.001 gated frame on its driver path
+      .config(graft.DriverGate.ForceDistributedConf, "true")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.001"
@@ -1555,17 +1555,20 @@ object ExplainAudit {
         (p => !p.contains("Window")),
       "no join, no cartesian" ->
         (p => !p.contains("Join") && !p.contains("CartesianProduct")))
-    audit("q_m62_dawid_skene",
-      // r16 combo fast path: the EM runs driver-side off the collected
-      // rater-label tuple counts, so the plan is ONE broadcast join of
-      // the k^R-row consensus relation onto the items — no per-item
-      // posterior shuffle, no window, no cartesian (DawidSkeneSpec pins
-      // the fast path against the distributed loop row-for-row)
+    // r16 combo fast path: the EM runs driver-side off the collected
+    // rater-label tuple counts, so the plan is ONE broadcast join of the
+    // k^R-row consensus relation onto the items — no per-item posterior
+    // shuffle, no window, no cartesian (DawidSkeneSpec pins the fast path
+    // against the distributed loop row-for-row). It audits the driver
+    // side of DriverGate, so it runs with the gate on.
+    spark.conf.set(graft.DriverGate.ForceDistributedConf, "false")
+    try audit("q_m62_dawid_skene",
       "consensus attaches by broadcast join" ->
         (_.contains("BroadcastHashJoin")),
       "no per-item posterior shuffle" ->
         (p => !p.contains("hashpartitioning(__i")),
       "no shuffled cartesian" -> (p => !p.contains("CartesianProduct")))
+    finally spark.conf.set(graft.DriverGate.ForceDistributedConf, "true")
     audit("q_m61_isotonic",
       // PAV pools on the driver over the collected BIN table
       // (config-sized); the bins themselves aggregated distributed
@@ -1762,7 +1765,7 @@ object ExplainAudit {
     // calls take the driver path, so the two-pass range exchanges and
     // every single-partition exchange are gone; the one range exchange
     // left is the query's own output orderBy("t")
-    spark.conf.set(graft.etl.GlobalIndex.ForceDistributedConf, "false")
+    spark.conf.set(graft.DriverGate.ForceDistributedConf, "false")
     try audit("q_m52_km",
       "gate on: the GlobalIndex frames are local" ->
         (_.contains("LocalTableScan")),
@@ -1770,7 +1773,7 @@ object ExplainAudit {
         (p => "rangepartitioning\\(".r.findAllIn(p).size == 1),
       "gate on: no single-partition exchange" ->
         (p => !p.contains("SinglePartition")))
-    finally spark.conf.set(graft.etl.GlobalIndex.ForceDistributedConf, "true")
+    finally spark.conf.set(graft.DriverGate.ForceDistributedConf, "true")
 
     if (failures.nonEmpty) {
       System.err.println("\nPLAN AUDIT FAILURES:\n" + failures.mkString("\n"))

@@ -8,11 +8,11 @@ import org.apache.spark.sql.functions._
 
 import graft.etl.GlobalIndex
 
-/** Cost of the GlobalIndex entry points on inputs PAST the measured-size
-  * gate (more than 2^16 rows), where the ranged two-pass path runs: wall
-  * time per call (index, running, grouped), Spark jobs per call, and the
-  * peak bytes held by persisted RDDs during the call (the gate's input
-  * cache and the range cache, if both are ever alive at once).
+/** Cost of the GlobalIndex entry points on inputs PAST the driver gate
+  * (more than 2^16 rows), where the ranged two-pass path runs: wall time
+  * per call (index, running, grouped), Spark jobs per call (the gate's
+  * probe included), and the peak bytes held by persisted RDDs during the
+  * call.
   *
   *   sbt "runMain graft.tools.GlobalIndexRangedBench [nRows] [scan|hash] [reps]"
   *

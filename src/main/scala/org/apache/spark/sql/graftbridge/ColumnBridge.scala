@@ -28,26 +28,87 @@ object DatasetBridge {
     df.queryExecution.analyzed
 }
 
-/** The session's cache entries, for measured-size gates: whether a
-  * frame's plan is cached, and its cached rows and bytes once filled. */
-object CacheBridge {
-  private def entry(df: org.apache.spark.sql.DataFrame) = {
-    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-    ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
+/** The bounded, uncached row probe behind `graft.DriverGate` (which
+  * documents the budgets and increments). */
+object RowProbe {
+  import org.apache.spark.rdd.RDD
+  import org.apache.spark.sql.{Column, DataFrame, Row}
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.expressions.{RowOrdering, UnsafeRow}
+  import org.apache.spark.sql.catalyst.plans.logical.Sort
+  import org.apache.spark.sql.execution.SQLExecution
+
+  /** The rows (None once a budget was passed), and the rows and bytes the
+    * probe read. */
+  final case class Probe(rows: Option[Array[Row]], seenRows: Long,
+      seenBytes: Long)
+
+  /** Probes `df` in one SQL execution against `maxRows` and the session's
+    * byte budget; under both, returns its rows, sorted by Catalyst's
+    * ordering of `df.orderBy(order)` when `order` is given. */
+  def apply(df: DataFrame, maxRows: Long, order: Seq[Column]): Probe = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
+    val conf = ds.sparkSession.sessionState.conf
+    val maxBytes = math.max(conf.autoBroadcastJoinThreshold, 0L)
+    val qe = ds.queryExecution
+    val (shipped, rows, bytes) = SQLExecution.withNewExecutionId(qe,
+        Some("collect")) {
+      qe.executedPlan.resetMetrics()
+      scan(qe.executedPlan.execute(), maxRows, maxBytes,
+        conf.limitInitialNumPartitions, math.max(conf.limitScaleUpFactor, 2))
+    }
+    if (rows > maxRows || bytes > maxBytes) return Probe(None, rows, bytes)
+    val output = ds.logicalPlan.output
+    if (order.nonEmpty) {
+      val sortOrder = ds.orderBy(order: _*).queryExecution.analyzed match {
+        case Sort(so, true, child, _) if child.output == output => so
+        case p => throw new IllegalArgumentException(
+          s"order must name the frame's own columns:\n$p")
+      }
+      java.util.Arrays.sort(shipped, RowOrdering.create(sortOrder, output))
+    }
+    val toRow = ds.exprEnc
+      .resolveAndBind(output, ds.sparkSession.sessionState.analyzer)
+      .createDeserializer()
+    Probe(Some(shipped.map(toRow)), rows, bytes)
   }
 
-  def isCached(df: org.apache.spark.sql.DataFrame): Boolean =
-    entry(df).isDefined
-
-  /** Fills the cache serving `df` (which must be cached) with ONE job — a
-    * row count over its cached batches, no shuffle — and returns (rows,
-    * cached bytes) as the cache measured them. */
-  def fill(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
-    val cache = entry(df).getOrElse(
-      throw new IllegalArgumentException("frame is not cached"))
-      .cachedRepresentation.cacheBuilder
-    val rows = cache.cachedColumnBuffers
-      .map(_.numRows.toLong).fold(0L)(_ + _)
-    (rows, cache.sizeInBytesStats.value.longValue)
+  /** Runs tasks over growing partition ranges (`executeTake`'s
+    * increments: `initial` partitions, then `scaleUp` times as many as
+    * were read) until every partition is read or a budget is passed. Each
+    * task reads at most the remaining row budget and stops once it passes
+    * the remaining byte budget; a task that reaches either ships no rows. */
+  private def scan(rdd: RDD[InternalRow], maxRows: Long, maxBytes: Long,
+      initial: Int, scaleUp: Int): (Array[InternalRow], Long, Long) = {
+    val total = rdd.partitions.length
+    val shipped = Array.newBuilder[InternalRow]
+    var rows = 0L
+    var bytes = 0L
+    var scanned = 0
+    while (scanned < total && rows <= maxRows && bytes <= maxBytes) {
+      val n = if (scanned == 0) initial else scanned * scaleUp
+      val parts = scanned until math.min(scanned + n, total)
+      val rowBudget = maxRows + 1 - rows
+      val byteBudget = maxBytes - bytes
+      rdd.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) => {
+        val out = Array.newBuilder[UnsafeRow]
+        var r = 0L
+        var b = 0L
+        while (r < rowBudget && b <= byteBudget && it.hasNext) {
+          val row = it.next().asInstanceOf[UnsafeRow].copy()
+          out += row
+          r += 1
+          b += row.getSizeInBytes
+        }
+        val over = r >= rowBudget || b > byteBudget
+        (r, b, if (over) Array.empty[UnsafeRow] else out.result())
+      }, parts).foreach { case (r, b, got) =>
+        rows += r
+        bytes += b
+        shipped ++= got
+      }
+      scanned += parts.length
+    }
+    (shipped.result(), rows, bytes)
   }
 }

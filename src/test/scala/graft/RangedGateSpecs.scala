@@ -2,13 +2,13 @@ package graft
 
 import org.scalatest.BeforeAndAfterAll
 
-/** Mixin that re-runs a caller suite with the GlobalIndex measured-size
-  * gate skipped (`spark.graft.gate.forceDistributed=true`), so every
-  * GlobalIndex call in it takes the range-partitioned path that runs at
-  * scale. Spec inputs are far below the gate's 2^16-row bound, so the
-  * suite as written checks the driver path; the re-run checks the same
-  * assertions on the ranged path. `rerun` picks the tests to repeat (all
-  * by default). */
+/** Mixin that re-runs a caller suite with every [[DriverGate]] skipped
+  * (`spark.graft.gate.forceDistributed=true`), so each gated call in it
+  * takes the distributed path that runs at scale (for GlobalIndex, the
+  * range-partitioned one). Spec inputs are far below the gates' bounds, so
+  * the suite as written checks the driver paths; the re-run checks the
+  * same assertions on the distributed ones. `rerun` picks the tests to
+  * repeat (all by default). */
 trait RangedGate extends SparkSpecBase with BeforeAndAfterAll {
   protected def rerun(testName: String): Boolean = true
 
@@ -16,15 +16,18 @@ trait RangedGate extends SparkSpecBase with BeforeAndAfterAll {
 
   override protected def beforeAll(): Unit = {
     super.beforeAll()
-    spark.conf.set(graft.etl.GlobalIndex.ForceDistributedConf, "true")
+    spark.conf.set(graft.DriverGate.ForceDistributedConf, "true")
   }
 
   override protected def afterAll(): Unit =
-    try spark.conf.unset(graft.etl.GlobalIndex.ForceDistributedConf)
+    try spark.conf.unset(graft.DriverGate.ForceDistributedConf)
     finally super.afterAll()
 }
 
-// One ranged re-run per GlobalIndex caller with a spec of its own.
+// One ranged re-run per gate caller with a spec of its own, plus
+// QualityClassifierSpec (whose fits pin only one input on both paths);
+// the DupClusters, BpeMerge and DawidSkene specs force the distributed
+// path themselves.
 class ShardingRangedSpec extends etl.ShardingSpec with RangedGate
 class PaddingReportRangedSpec extends etl.PaddingReportSpec with RangedGate
 class ShuffleQualityRangedSpec extends etl.ShuffleQualitySpec with RangedGate
@@ -50,4 +53,19 @@ class TextOpsPackRangedSpec extends text.TextOpsSpec with RangedGate {
 class SemanticAdaptiveRangedSpec extends sim.SemanticAdaptiveSpec with RangedGate
 class SmoteRangedSpec extends metrics.SamplerSpec with RangedGate {
   override protected def rerun(t: String): Boolean = t.contains("smote")
+}
+class QualityClassifierRangedSpec extends text.QualityClassifierSpec
+  with RangedGate
+class FertilityRangedSpec extends text.FertilitySpec with RangedGate
+class CorpusCurationRangedSpec extends pipeline.CorpusCurationSpec
+  with RangedGate
+class VisualClustersRangedSpec extends multimodal.VisualClustersSpec
+  with RangedGate
+class SemanticClustersRangedSpec extends sim.SimilarityOpsSpec with RangedGate {
+  override protected def rerun(t: String): Boolean =
+    t.startsWith("semantic clusters")
+}
+class StreamClustersRangedSpec extends streaming.StreamsSpec with RangedGate {
+  override protected def rerun(t: String): Boolean =
+    t.startsWith("streaming cluster maintenance")
 }

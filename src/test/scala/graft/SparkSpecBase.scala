@@ -16,11 +16,11 @@ trait SparkSpecBase extends AnyFunSuite {
 
   lazy val sf: String = "/root/testdata/sf0.001"
 
-  /** Runs `body` with the GlobalIndex measured-size gate skipped
-    * (`forceDistributed = true`: the ranged plans that run at scale) or
-    * taken (`false`, the default), restoring the session conf after. */
+  /** Runs `body` with every [[graft.DriverGate]] skipped
+    * (`forceDistributed = true`: the distributed plans that run at scale)
+    * or taken (`false`, the default), restoring the session conf after. */
   def withGate[T](forceDistributed: Boolean)(body: => T): T = {
-    val key = graft.etl.GlobalIndex.ForceDistributedConf
+    val key = graft.DriverGate.ForceDistributedConf
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, forceDistributed.toString)
     try body

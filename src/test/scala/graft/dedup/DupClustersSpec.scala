@@ -23,8 +23,9 @@ class DupClustersSpec extends SparkSpecBase {
     // inside maxIter=25 (log-diameter rounds), where plain propagation
     // would need 63
     val pairs = (0L until 63L).map(i => (i, i + 1)).toDF("ida", "idb")
-    val comp = DupClusters.connectedComponents(pairs, smallGraphEdges = 0L)
-      .collect()
+    val comp = withGate(forceDistributed = true) {
+      DupClusters.connectedComponents(pairs).collect()
+    }
     assert(comp.length == 64 && comp.forall(_.getLong(1) == 0L))
   }
 
@@ -46,15 +47,15 @@ class DupClustersSpec extends SparkSpecBase {
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
     val expected = parent.keys.map(x => x -> find(x)).toMap
-    // r15: the driver fast path (default threshold) and the distributed
-    // loop (forced with smallGraphEdges = 0) must BOTH equal the
-    // reference — and therefore each other
+    // r15: the driver fast path (gate taken) and the distributed loop
+    // (gate skipped) must BOTH equal the reference — and therefore each
+    // other
     val gotSmall = DupClusters.connectedComponents(
       edges.toDF("ida", "idb")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val gotLoop = DupClusters.connectedComponents(
-      edges.toDF("ida", "idb"), smallGraphEdges = 0L).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val gotLoop = withGate(forceDistributed = true) {
+      DupClusters.connectedComponents(edges.toDF("ida", "idb")).collect()
+    }.map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(gotSmall.keySet === expected.keySet)
     // same partition AND the same canonical min-id representative
     assert(gotSmall === expected)
@@ -123,13 +124,15 @@ class DupClustersSpec extends SparkSpecBase {
       .toString
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L),
       (20L, 21L)).toDF("ida", "idb")
-    val local = DupClusters.connectedComponents(pairs, smallGraphEdges = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val local = withGate(forceDistributed = true) {
+      DupClusters.connectedComponents(pairs).collect()
+    }.map(r => r.getLong(0) -> r.getLong(1)).toMap
     // the reliable-path variant must also force the loop, or there is no
     // checkpoint to compare
-    val reliable = DupClusters.connectedComponents(pairs,
-      smallGraphEdges = 0L, checkpointDir = Some(dir))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val reliable = withGate(forceDistributed = true) {
+      DupClusters.connectedComponents(pairs, checkpointDir = Some(dir))
+        .collect()
+    }.map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(reliable === local)
   }
 

@@ -68,9 +68,9 @@ class DawidSkeneSpec extends SparkSpecBase {
         (r.getAs[String]("label"), r.getAs[Long]("conf_micro"))).toMap
     val fast = collectMap(DawidSkene.fit(
       wide, "item", Seq("r1", "r2", "r3"), classes))
-    val slow = collectMap(DawidSkene.fitGated(
-      wide, "item", Seq("r1", "r2", "r3"), classes, iters = 5,
-      maxCombos = 0))
+    val slow = withGate(forceDistributed = true) {
+      collectMap(DawidSkene.fit(wide, "item", Seq("r1", "r2", "r3"), classes))
+    }
     assert(fast === slow)
   }
 
@@ -86,8 +86,9 @@ class DawidSkeneSpec extends SparkSpecBase {
       df.orderBy("item").collect().map(_.toSeq).toSeq
     assert(dump(DawidSkene.fit(wide, "item", Seq("r1", "r2", "r3"),
         classes3)) ===
-      dump(DawidSkene.fitGated(wide, "item", Seq("r1", "r2", "r3"),
-        classes3, iters = 5, maxCombos = 0)))
+      withGate(forceDistributed = true) {
+        dump(DawidSkene.fit(wide, "item", Seq("r1", "r2", "r3"), classes3))
+      })
   }
 
   test("integer and null labels: the combo path equals the distributed loop") {
@@ -104,8 +105,9 @@ class DawidSkeneSpec extends SparkSpecBase {
       df.orderBy("item").collect().map(_.toSeq).toSeq
     val fast = dump(DawidSkene.fit(wide, "item", Seq("r1", "r2", "r3"),
       classesInt))
-    val slow = dump(DawidSkene.fitGated(wide, "item", Seq("r1", "r2", "r3"),
-      classesInt, iters = 5, maxCombos = 0))
+    val slow = withGate(forceDistributed = true) {
+      dump(DawidSkene.fit(wide, "item", Seq("r1", "r2", "r3"), classesInt))
+    }
     assert(fast === slow)
     assert(fast.map(_.head) === Seq(1L, 2L, 3L, 4L, 6L, 7L, 9L, 10L))
   }

@@ -51,7 +51,9 @@ class BpeMergeSpec extends SparkSpecBase {
     val docs = Seq("low low lower", "low low lower", "new newer",
       "héllo héllo").toDF("text")
     val (fastM, fastV) = BpeMerge.learnState(docs, "text", 3)
-    val (slowM, slowV) = BpeMerge.learnState(docs, "text", 3, maxVocab = 0)
+    val (slowM, slowV) = withGate(forceDistributed = true) {
+      BpeMerge.learnState(docs, "text", 3)
+    }
     assert(fastM === slowM)
     def dump(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), r.getLong(1),
@@ -64,7 +66,9 @@ class BpeMergeSpec extends SparkSpecBase {
   test("driver-local learn fast path equals distributed on the sf corpus") {
     val docs = graft.Tables.documents(spark, sf)
     val (fastM, fastV) = BpeMerge.learnState(docs, "text", 3)
-    val (slowM, slowV) = BpeMerge.learnState(docs, "text", 3, maxVocab = 0)
+    val (slowM, slowV) = withGate(forceDistributed = true) {
+      BpeMerge.learnState(docs, "text", 3)
+    }
     assert(fastM === slowM)
     assert(fastV.count() === slowV.count())
     assert(fastV.exceptAll(slowV).isEmpty && slowV.exceptAll(fastV).isEmpty)

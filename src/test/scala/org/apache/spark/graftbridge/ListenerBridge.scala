@@ -1,0 +1,10 @@
+package org.apache.spark.graftbridge
+
+import org.apache.spark.SparkContext
+
+/** The listener bus delivers events asynchronously and its drain is
+  * `private[spark]`; specs that count jobs or tasks with a listener wait
+  * here before reading their counts. */
+object ListenerBridge {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}

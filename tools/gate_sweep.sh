@@ -1,14 +1,14 @@
 #!/usr/bin/env bash
-# Oracle sweep over both sides of the GlobalIndex measured-size gate.
+# Oracle sweep over both sides of every graft.DriverGate.
 #
 # Runs graft.Verify (with its name-filter argument) over every registered
-# query that reaches a gated helper -- GlobalIndex.withGlobalIndex*,
-# withGlobalCumsum*, withGlobalRunning, withGroupedIndex, and the inline
-# two-pass copies in FdrSweep.bhStepUp and Wasserstein.oneVsRest -- once
-# with the gate taken (the default) and once with
-# spark.graft.gate.forceDistributed=true (the ranged plans a large input
-# takes), at each scale factor, and checks every run against the DuckDB
-# oracle with tools/check_oracle.py.
+# query that reaches a driver gate -- the GlobalIndex core and its
+# FdrSweep.bhStepUp / Wasserstein.oneVsRest copies,
+# DupClusters.connectedComponents, DawidSkene.fit, QualityClassifier.fit
+# and BpeMerge.learnState -- once with the gates taken (the default) and
+# once with spark.graft.gate.forceDistributed=true (the distributed plans
+# a large input takes), at each scale factor, and checks every run against
+# the DuckDB oracle with tools/check_oracle.py.
 #
 # Usage (from anywhere; sbt runs with the caller's SBT_OPTS):
 #   tools/gate_sweep.sh <out_dir> <sf_dir> [<sf_dir> ...]
@@ -26,15 +26,14 @@ sfs=()
 for sf in "$@"; do sfs+=("$(cd "$sf" && pwd)"); done
 cd "$(dirname "$0")/.."
 
-# Every registered query whose plan reaches a gated helper, as logged by
-# the "graft.gate" logger over a full registry run at sf0.001: the ten
-# GlobalIndex users of the analytics benchmark (q_m56_auc is listed with
-# them, although its Mann-Whitney plan calls no gated helper),
-# q_a14_mad_outliers, and the other callers. Verify matches names as
-# substrings, so a name that prefixes another query runs that query too.
+# Every registered query that reaches a gate, as logged by the
+# "graft.gate" logger over a full registry run at sf0.001 (46 queries).
+# Verify matches names as substrings, so a name that prefixes another
+# query runs that query too.
 queries=(
-  q_m52_km q_e_embargo_split q_m56_auc q_m57_gains q_m78_wasserstein
-  q_m53_logrank q_m49_bh_fdr q_m77_dunn q_p27_unimax q_s_semantic_adaptive
+  # GlobalIndex, FdrSweep, Wasserstein
+  q_m52_km q_e_embargo_split q_m57_gains q_m78_wasserstein q_m53_logrank
+  q_m49_bh_fdr q_m77_dunn q_p27_unimax q_s_semantic_adaptive
   q_a14_mad_outliers
   q_j3_positional q_m36_quantile_bins q_m43_quantile_map q_p17_token_shards
   q_p18_shuffle q_p32_curriculum q_p36_padding_waste q_p37_shuffle_quality
@@ -42,6 +41,11 @@ queries=(
   q_t_dsir q_t_pack q_t_pack_bestfit q_t_pack_bestfit_assign
   q_t_pack_bestfit_masks q_t_pack_contamination q_t_pack_curriculum
   q_t_pack_grouped q_t_ppl_buckets q_w1_avg_rank
+  # DupClusters, DawidSkene, QualityClassifier, BpeMerge
+  q_d_cc_incremental q_d_dup_clusters q_d_leak_split q_mm_image_clusters
+  q_mm_phash_clusters q_pipeline_corpus q_s_cluster_labels
+  q_s_semantic_clusters q_m62_dawid_skene q_t_quality_clf
+  q_t_quality_clf_transfer q_t_bpe_encode q_t_bpe_merges q_t_fertility
 )
 filter=$(IFS=,; echo "${queries[*]}")
 
