@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs the headline query set on
   * SPARK_GRAFT_SF_DIR at local[N] and prints ONE JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
@@ -566,7 +564,6 @@ object Bench {
     require(noRef.isEmpty,
       s"BenchSet entries missing a RefSec reference: ${noRef.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
     // Bench numbers recorded while leftover sbt/test JVMs still run are
     // contention artifacts, not engine cost. Wait (up to 10 min) for BOTH
@@ -587,23 +584,16 @@ object Bench {
       System.err.println(f"[bench] WARNING: recording under load1 $loadStart%.2f / load5 $load5Start%.2f" +
         " — timings below overstate real cost")
     val ticksStart = cpuTicks()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // r16 note: status-store retention caps (spark.sql.ui.
-      // retainedExecutions etc.) were HYPOTHESIZED to explain the
-      // residual in-bench position noise and tested with a capped vs
-      // uncapped FULL bench on the same code: totals 371.4 vs 372.6 s,
-      // per-position-third geomean ratios 1.04/0.94/1.02 — no effect, so
-      // the caps are NOT shipped and the session config stays identical
-      // to prior rounds (the earlier micro-batch "confirmation" was
-      // confounded by load decaying from preceding sbt work — TimeOne
-      // batches are only trustworthy on a quiet machine).
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // r16 note: status-store retention caps (spark.sql.ui.
+    // retainedExecutions etc.) were HYPOTHESIZED to explain the
+    // residual in-bench position noise and tested with a capped vs
+    // uncapped FULL bench on the same code: totals 371.4 vs 372.6 s,
+    // per-position-third geomean ratios 1.04/0.94/1.02 — no effect, so
+    // the caps are NOT shipped and the session config stays identical
+    // to prior rounds (the earlier micro-batch "confirmation" was
+    // confounded by load decaying from preceding sbt work — TimeOne
+    // batches are only trustworthy on a quiet machine).
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("WARN")
 
     // warm up the session (parquet reader + codegen paths)

@@ -120,7 +120,8 @@ object DedupOps {
     * r15 verify-join rewrite: the exact |∩| was counted by exploding
     * every candidate's FULL left-side shingle list (cands × avg-set
     * rows — 21M intermediate rows and 6.3 s of the 8 s query at
-    * sf0.1, ProfilePrefixJaccard) and re-joining on (idb, shingle).
+    * sf0.1; OPTIMIZATION_r16.md, "Retired measurement tools") and
+    * re-joining on (idb, shingle).
     * Now each doc's distinct shingle set is collected ONCE
     * (corpus-keyed agg) and candidates attach both sets by equi-join;
     * |∩| is `size(array_intersect(...))` — codegen'd hash-set
@@ -547,7 +548,8 @@ object DedupOps {
     // levenshtein arbitration is CPU-dense per row but tiny in BYTES
     // (two ids), so AQE's byte-targeted coalescing collapsed it to ~1
     // partition and serialized ~3.2e9 DP cells on one core (measured
-    // 32.6 s → 2.3 s at sf0.1, ProfileCorpusPipeline). The count is
+    // 32.6 s → 2.3 s at sf0.1; OPTIMIZATION_r16.md, "Retired measurement
+    // tools"). The count is
     // the session's shuffle-partition setting (the cluster-scale knob;
     // defaultParallelism fallback), never a constant; an explicit
     // numPartitions is exempt from AQE coalescing, and the broadcast
@@ -687,7 +689,8 @@ object DedupOps {
     // former shape — transform()+forall() higher-order functions
     // (CodegenFallback, interpreted per gram row) over a broadcast MAP
     // whose element_at is a LINEAR scan of all 1024 entries — measured
-    // 3.2 s of the query's 5.6 s at sf0.1 (ProfileBloomDecon); the
+    // 3.2 s of the query's 5.6 s at sf0.1 (OPTIMIZATION_r16.md, "Retired
+    // measurement tools"); the
     // unrolled probe is O(kHash) array indexing inside whole-stage
     // codegen. Identical bitmap construction and probe positions
     // (sequence(1, kHash) yields INTs, so the unrolled literals hash
@@ -911,7 +914,8 @@ object DedupOps {
     * zero — top bits, because every rolling step multiplies, so low-bit
     * entropy propagates up but not down. Portable: the oracle replays
     * the identical hash (Σ cp·mult^k mod 2^64 per position, HUGEINT
-    * arithmetic) in DuckDB. GramHashBench (cdc stage, 20k docs x 4 KB):
+    * arithmetic) in DuckDB. Measured on the cdc stage alone (20k docs x
+    * 4 KB; OPTIMIZATION_r16.md, "Retired measurement tools"):
     * composed md5 26.2 s → rolling 0.6 s (44x), and the gap widens with
     * doc length; end-to-end q_d_cdc_chunks at sf0.1 warm 3.6 s → 1.5 s
     * (TimeOne). The hash array rides `zip_with` as an ARGUMENT — an

@@ -127,9 +127,13 @@ object DupClusters {
     }
     // no distinct: MIN-propagation is duplicate-insensitive, so repeated
     // edges cost a few joined rows but never a correctness bit — and the
-    // dedup would be a full extra shuffle of the edge list. Cached for the
-    // loop's rounds.
-    val edges = fwd.union(fwd.select(col("b").as("a"), col("a").as("b")))
+    // dedup would be a full extra shuffle of the edge list. Both
+    // directions come from ONE scan of the pair list (a union of fwd and
+    // its swap would run the pair list's whole upstream once per branch).
+    // Cached for the loop's rounds.
+    val edges = fwd.select(explode(array(struct(col("a"), col("b")),
+        struct(col("b").as("a"), col("a").as("b")))).as("e"))
+      .select(col("e.a").as("a"), col("e.b").as("b"))
       .cache()
     // localCheckpoint (not cache) each round: an iterative self-joining
     // DataFrame otherwise DOUBLES its logical plan per iteration — caching
@@ -666,8 +670,9 @@ object DupClusters {
     * span, not a wrong answer). The composed alternative —
     * `transform(sequence, i -> xxhash64(substr(text, i+1, L)))` — is
     * O(len²) per doc (UTF8String substr re-scans from the string head to
-    * find each code-point offset): GramHashBench measured the port at
-    * 56x on 4 KB docs (47.5 s -> 0.85 s, 20k docs) BEFORE it was made.
+    * find each code-point offset): the port measured 56x on 4 KB docs
+    * (47.5 s -> 0.85 s, 20k docs) BEFORE it was made (OPTIMIZATION_r16.md,
+    * "Retired measurement tools").
     * Duplication is a count over the hash key via ONE window (partitionBy
     * the key: single shuffle, no groupBy-then-rejoin second shuffle of
     * the gram rows), and spans reassemble in a per-doc gaps-and-islands

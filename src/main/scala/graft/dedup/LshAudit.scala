@@ -41,7 +41,8 @@ object LshAudit {
     * 12 lowercase hex chars to the identical unsigned 48-bit integer,
     * exact in long), but the digit-sum expression was 24 string ops ×
     * 8 hashes per shingle row and measured 14.0 s of the audit's 24 s
-    * at sf0.1 (ProfileLshAudit); the conv form measures ~0.4 s. The
+    * at sf0.1 (OPTIMIZATION_r16.md, "Retired measurement tools"); the
+    * conv form measures ~0.4 s. The
     * DuckDB oracle keeps the digit-sum arithmetic (hex48Duck) — the
     * hash gate proves value equality every run. */
   private def hex48(hexCol: String): String =
@@ -65,9 +66,9 @@ object LshAudit {
     // former inline form re-evaluated tokens(lower(text)) inside the
     // shingle lambda (3 element_at references + 2 size references per
     // position = O(len²) re-splitting), measured 8.9 s of the audit's
-    // 24 s at sf0.1 (ProfileLshAudit); with the single projection the
-    // shingle pass is ~1 s. Identical shingle set (the DedupOps
-    // .shingles discipline).
+    // 24 s at sf0.1 (OPTIMIZATION_r16.md, "Retired measurement tools");
+    // with the single projection the shingle pass is ~1 s. Identical
+    // shingle set (the DedupOps .shingles discipline).
     val sh = df.select(col(idCol).as("id"),
         graft.text.TextOps.tokens(lower(col(textCol))).as("__toks"))
       .select(col("id"),

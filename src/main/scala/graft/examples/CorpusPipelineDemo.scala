@@ -5,7 +5,6 @@ import graft.dedup.{DedupOps, DupClusters}
 import graft.etl.DataMix
 import graft.sim.SimilarityOps
 import graft.text.TextOps
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Runnable end-to-end training-data curation pipeline over the documents
@@ -30,12 +29,7 @@ object CorpusPipelineDemo {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/graft_corpus")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local()
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = Tables.documents(spark, sfDir)

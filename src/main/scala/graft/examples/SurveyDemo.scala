@@ -1,7 +1,6 @@
 package graft.examples
 
 import graft.pipeline.{SegmentationPipeline, Sinks, WorkQueue}
-import org.apache.spark.sql.SparkSession
 
 /** Runnable end-to-end demo of the survey-segmentation pipeline (SURVEY.md
   * §3.1 lifecycle): work-queue poll → clean → segmentation battery → χ²
@@ -12,11 +11,7 @@ import org.apache.spark.sql.SparkSession
 object SurveyDemo {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/graft_demo")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

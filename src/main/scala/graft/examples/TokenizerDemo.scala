@@ -3,7 +3,6 @@ package graft.examples
 import graft.Tables
 import graft.etl.DataMix
 import graft.text.{BpeMerge, TextOps}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Runnable tokenizer lifecycle over the documents corpus — the
@@ -27,12 +26,7 @@ object TokenizerDemo {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/graft_tok")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local()
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = Tables.documents(spark, sfDir)

@@ -15,9 +15,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Replaces [[graft.text.BpeMerge]]'s composed `aggregate` fold: higher-
   * order array functions are CodegenFallback, and the fold paid an
   * interpreted lambda plus TWO array re-allocations (out :+ elem) per
-  * symbol. Measured by [[graft.tools.BpeVocabBench]] at a 10⁶-word ×
-  * 32-symbol vocab, the interpreted fold was ~62% of a BPE iteration
-  * (4.3 s vs 2.7 s for pair counting); this expression is a single
+  * symbol. Measured at a 10⁶-word × 32-symbol vocab (OPTIMIZATION_r16.md,
+  * "Retired measurement tools"), the interpreted fold was ~62% of a BPE
+  * iteration (4.3 s vs 2.7 s for pair counting); this expression is a single
   * allocation-bounded loop inside WholeStageCodegen.
   *
   * Exact-parity contract with the composed fold (the DuckDB oracle

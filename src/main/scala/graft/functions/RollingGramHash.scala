@@ -20,9 +20,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Replaces the composed `transform(sequence(...), i -> xxhash64(substr(
   * text, i+1, L)))` key stage of [[graft.dedup.DupClusters.exactCharSpans]],
   * which re-reads L characters per position — O(len·L) work and one
-  * UTF8String slice allocation per position. Measured before porting
-  * (GramHashBench, the BpeVocabBench discipline): see the bench output in
-  * the Scaladoc of `exactCharSpans` for the recorded ratio.
+  * UTF8String slice allocation per position. Measured before porting:
+  * see the Scaladoc of `exactCharSpans` and OPTIMIZATION_r16.md, "Retired
+  * measurement tools", for the recorded ratio.
   *
   * Positions are CODE POINTS (one decode pass per string), exactly the
   * unit `substr`/`length` count in both Spark and DuckDB — so span

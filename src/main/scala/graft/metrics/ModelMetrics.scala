@@ -35,17 +35,22 @@ object ModelMetrics {
   }
 
   /** M18/M19: consistency check — deterministic 90/10 split by key-hash
-    * (stable across runs, unlike randomSplit), refit on the 90%, ARI of the
-    * refit labels vs the original on the common rows (metrics.py:234-308). */
-  def modelConsistency(df: DataFrame, idCol: String, featuresCol: String,
-      k: Int, seed: Long): Double = {
+    * (stable across runs, unlike randomSplit), ONE refit on the 90%, and
+    * the ARI of the refit labels vs the original `cluster` labels over
+    * every row (M18, model consistency) and over the training rows only
+    * (M19, label consistency: the reference's StratifiedShuffleSplit
+    * train-side comparison) — metrics.py:234-308. */
+  def consistency(df: DataFrame, idCol: String, featuresCol: String,
+      k: Int, seed: Long): (Double, Double) = {
     val withBucket = df.withColumn("__b", pmod(hash(col(idCol)), lit(10)))
     val train = withBucket.filter(col("__b") =!= 0)
     val refit = new org.apache.spark.ml.clustering.KMeans().setK(k).setSeed(seed)
       .setFeaturesCol(featuresCol).setPredictionCol("cluster2")
       .fit(train)
-    val relabeled = refit.transform(withBucket.drop("cluster2"))
-    ClusterQuality.adjustedRand(relabeled, "cluster", "cluster2")
+    val relabeled = refit.transform(withBucket)
+    (ClusterQuality.adjustedRand(relabeled, "cluster", "cluster2"),
+      ClusterQuality.adjustedRand(relabeled.filter(col("__b") =!= 0),
+        "cluster", "cluster2"))
   }
 
   /** M18+M19 at the exact-replay parameterization ([[graft.cluster.KMeansLloyd]]
@@ -55,7 +60,7 @@ object ModelMetrics {
     * contingency is exact and the ARI closed form's intermediate sums are
     * exact integers in double, so the DuckDB replay
     * ([[graft.cluster.LloydOracleSql.consistency]]) is deterministic. The
-    * MLlib KMeans + hash-bucket variants above remain the general API. */
+    * MLlib KMeans + hash-bucket [[consistency]] remains the general API. */
   def consistencyLloyd(df: DataFrame, idCol: String, zCol: String,
       init: Seq[Long], maxIter: Int = 2): (Double, Double) = {
     import graft.cluster.KMeansLloyd
@@ -76,19 +81,6 @@ object ModelMetrics {
       graft.stats.ContingencyMath.adjustedRandIndex(m)
     }
     (ari(joined), ari(joined.filter(col("id") % 10 =!= 0)))
-  }
-
-  /** M19: label consistency — refit on a deterministic 90% split and score
-    * ARI between refit labels and the ORIGINAL labels on the training rows
-    * only (the reference's StratifiedShuffleSplit train-side comparison,
-    * metrics.py:273-308; M18 scores the full frame instead). */
-  def labelConsistency(df: DataFrame, idCol: String, featuresCol: String,
-      k: Int, seed: Long): Double = {
-    val withBucket = df.withColumn("__b", pmod(hash(col(idCol)), lit(10)))
-    val train = withBucket.filter(col("__b") =!= 0)
-    val refit = new org.apache.spark.ml.clustering.KMeans().setK(k).setSeed(seed)
-      .setFeaturesCol(featuresCol).setPredictionCol("cluster2").fit(train)
-    ClusterQuality.adjustedRand(refit.transform(train), "cluster", "cluster2")
   }
 
   /** M25: RandomForest signal loss — train RF to predict the cluster from

@@ -23,12 +23,12 @@ object MultimodalOps {
 
   /** ImageIO defaults to a DISK-backed stream cache — every
     * encode/decode creates and deletes a temp FILE. The in-memory cache
-    * is 3.5× faster per call single-threaded (tools/ImageIoBench:
-    * 5000 PNG encode+decodes 0.95 s → 0.27 s warm) and removes
-    * filesystem contention across 32 executor threads. JVM-global and
-    * idempotent; every synth/decode closure references this lazy val so
-    * each executor JVM flips it exactly once (r16, guide §1.2 per-task
-    * work). */
+    * is 3.5× faster per call single-threaded (5000 PNG encode+decodes
+    * 0.95 s → 0.27 s warm; OPTIMIZATION_r16.md, "Retired measurement
+    * tools") and removes filesystem contention across 32 executor
+    * threads. JVM-global and idempotent; every synth/decode closure
+    * references this lazy val so each executor JVM flips it exactly once
+    * (r16, guide §1.2 per-task work). */
   private[multimodal] lazy val imageIoInMemory: Unit =
     javax.imageio.ImageIO.setUseCache(false)
 

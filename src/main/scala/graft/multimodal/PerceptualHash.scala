@@ -185,10 +185,6 @@ object PerceptualHash {
     bos.toByteArray
   }
 
-  /** [[synthTexturePng]] for [[graft.tools.ImageIoBench]] (measurement
-    * access only). */
-  def synthTexturePngForBench(id: Long): Array[Byte] = synthTexturePng(id)
-
   /** Oracle CTE chain ending in `psig(id, phash)` — the synthetic-PNG
     * pHash replay: closed-form pixels, the interpolated integer DCT
     * table, the 32nd-order-statistic threshold, and the bit pack.

@@ -65,8 +65,8 @@ object CorpusCuration {
     // decontamination grams AND the post-decon corpus read it, and Spark
     // does not subtree-dedup across joins, so uncached the whole
     // simhash + editVerify + CC chain re-executed per reference
-    // (ProfileCorpusPipeline measured the decon stage re-running inside
-    // the quality/sampling pass).
+    // (the decon stage was measured re-running inside the quality/sampling
+    // pass; OPTIMIZATION_r16.md, "Retired measurement tools").
     val champions = DupClusters.canonicalize(surv, confirmed, idCol, "clean")
       .filter(col("is_canonical") === 1)
       .select(col("doc_id").as(idCol), col("cluster_size"))

@@ -251,11 +251,8 @@ object SegmentationPipeline {
     val kmLabeled = sel.labeled
     val (kmDeliver, kmVars) = infer(kmLabeled
       .drop("features", "__scaled").drop(config.clusterCols.map(c => s"${c}_enc"): _*))
-    val kmConsistency = (
-      ModelMetrics.modelConsistency(kmLabeled, config.idCol, "features",
-        sel.k, sel.seed),
-      ModelMetrics.labelConsistency(kmLabeled, config.idCol, "features",
-        sel.k, sel.seed))
+    val kmConsistency = ModelMetrics.consistency(kmLabeled, config.idCol,
+      "features", sel.k, sel.seed)
     results += "kmeans" -> Result("kmeans", kmLabeled, kmDeliver,
       segmentMetrics(kmLabeled, kmDeliver, Some("features"),
         testedVariables = kmVars, consistency = Some(kmConsistency),

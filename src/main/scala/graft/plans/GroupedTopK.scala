@@ -30,10 +30,11 @@ import org.apache.spark.sql.graftbridge.DatasetBridge
   * aggregate buffer would be. `TakeOrderedAndProject` is this idea for
   * ONE global group; Spark has no grouped form — hence the custom node.
   *
-  * GroupedTopKBench measured 7.3x against the window encoding (5.25 s
-  * -> 0.72 s, 50M rows / 100 groups / k=10, local[32]); the spec pins
-  * exact row-set equality against the window encoding (including ties,
-  * which break by the sort order's trailing total-order columns), and
+  * Measured 7.3x against the window encoding (5.25 s -> 0.72 s, 50M
+  * rows / 100 groups / k=10, local[32]; OPTIMIZATION_r16.md, "Retired
+  * measurement tools"); the spec pins exact row-set equality against the
+  * window encoding (including ties, which break by the sort order's
+  * trailing total-order columns), and
   * q_w6_grouped_topk hash-matches a DuckDB QUALIFY replica.
   */
 final case class GroupedTopKNode(groupExprs: Seq[Expression],

@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions._
   * seeded-IVF probe as the run and the EXACT brute-force top-3 as the
   * qrels, so the certified metric IS the engine's own ANN recall — the
   * quantity every IVF/PQ/LSH parameter choice in this repo was tuned
-  * on (KnnProbe's 0.48→0.91 numbers), now computable at corpus scale
-  * inside the engine instead of by a driver-side probe tool.
+  * on (the 0.48→0.91 recall numbers in OPTIMIZATION_r16.md, "Retired
+  * measurement tools"), now computable at corpus scale inside the engine
+  * instead of by a driver-side probe tool.
   *
   * Cross-engine determinism: counts/ranks are exact integers; each DCG
   * term is `floor(gain·1e6 / log2(rank+1))` — integer inputs through an

@@ -838,10 +838,11 @@ object SimilarityOps {
             FROM r WHERE rank <= 3 ORDER BY qid, rank"""))
 
   /** Corpus-wide 5-NN graph on the seeded 16-list quantizer, 4 probes.
-    * Geometry measured before pinning (KnnProbe, sf0.001, recall@3 of
-    * exact): one-sided candidates (16,4) → 0.48; SYMMETRIC (16,2) → 0.49,
-    * (16,4) → 0.91, (16,6) → 1.00 — symmetric generation ~doubles recall
-    * at the same candidate bound, so (16,4) is the default. */
+    * Geometry measured before pinning (sf0.001, recall@3 of exact;
+    * OPTIMIZATION_r16.md, "Retired measurement tools"): one-sided
+    * candidates (16,4) → 0.48; SYMMETRIC (16,2) → 0.49, (16,4) → 0.91,
+    * (16,6) → 1.00 — symmetric generation ~doubles recall at the same
+    * candidate bound, so (16,4) is the default. */
   /** Shared oracle CTE chain for the (16, 4)-geometry kNN graph: seeded
     * centroids, squared-distance argmin probes, symmetric probe-list
     * candidates, exact cosine, per-qid rank. Ends at CTE `r`. */

@@ -35,11 +35,11 @@ object BpeMerge {
     * "bbb") merge exactly as BPE does: [bb, b].
     *
     * Runs as the codegen'd [[graft.functions.BpeMergeFold]] expression:
-    * [[graft.tools.BpeVocabBench]] measured the composed `aggregate` fold
-    * at ~62% of a BPE iteration on a 10⁶-word vocab (CodegenFallback
-    * lambda + two array re-allocations per symbol), which tripped the
-    * port-to-codegen trigger. [[applyMergeComposed]] keeps the fold for
-    * the randomized equivalence spec. */
+    * the composed `aggregate` fold measured ~62% of a BPE iteration on a
+    * 10⁶-word vocab (CodegenFallback lambda + two array re-allocations per
+    * symbol; OPTIMIZATION_r16.md, "Retired measurement tools"), which
+    * tripped the port-to-codegen trigger. [[applyMergeComposed]] keeps
+    * the fold for the randomized equivalence spec. */
   private[text] def applyMerge(syms: Column, x: String, y: String): Column =
     graft.functions.BpeMergeFold.merge(syms, x, y)
 
@@ -65,13 +65,6 @@ object BpeMerge {
         concat(acc.getField("out"), array(acc.getField("pend"))))
         .otherwise(acc.getField("out")))
   }
-
-  /** [[applyMerge]] / [[applyMergeComposed]] for callers outside the
-    * package ([[graft.tools.BpeVocabBench]]'s vocab-scale measurement). */
-  def applyMergeCol(syms: Column, x: String, y: String): Column =
-    applyMerge(syms, x, y)
-  def applyMergeComposedCol(syms: Column, x: String, y: String): Column =
-    applyMergeComposed(syms, x, y)
 
   /** Adjacent-pair frame (x, y, cnt) of the current symbol table, weighted
     * by word frequency. Single-symbol words contribute nothing (the

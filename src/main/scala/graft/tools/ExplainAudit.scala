@@ -3,7 +3,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Prints formatted physical plans for representative queries and asserts
   * the plan properties the engine is designed around: predicate pushdown,
@@ -11,17 +10,13 @@ import org.apache.spark.sql.SparkSession
   * whole-stage codegen coverage. Exits nonzero if an expectation fails. */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // audit-only: AQE's unexecuted formatted plans omit codegen ids;
-      // production sessions (Verify/Bench) keep AQE on
-      .config("spark.sql.adaptive.enabled", "false")
-      // audit the plans that run at scale: graft.DriverGate would put
-      // every sf0.001 gated frame on its driver path
-      .config(graft.DriverGate.ForceDistributedConf, "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session.local(cores = 4)
+    // audit-only: AQE's unexecuted formatted plans omit codegen ids;
+    // production sessions (Verify/Bench) keep AQE on
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    // audit the plans that run at scale: graft.DriverGate would put
+    // every sf0.001 gated frame on its driver path
+    spark.conf.set(graft.DriverGate.ForceDistributedConf, "true")
     spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.001"
 

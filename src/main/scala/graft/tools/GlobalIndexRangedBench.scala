@@ -1,11 +1,9 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.{QueryMetrics, Session}
 import graft.etl.GlobalIndex
 
 /** Cost of the GlobalIndex entry points on inputs PAST the driver gate
@@ -28,19 +26,10 @@ object GlobalIndexRangedBench {
     val nRows = args.headOption.map(_.toLong).getOrElse(2000000L)
     val input = args.drop(1).headOption.getOrElse("scan")
     val reps = args.drop(2).headOption.map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local()
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
     spark.sparkContext.setLogLevel("ERROR")
     val sc = spark.sparkContext
-    val jobs = new AtomicInteger()
-    sc.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    })
 
     val dir = java.nio.file.Files.createTempDirectory("gi-ranged-bench")
     val path = dir.resolve("t").toString
@@ -90,15 +79,16 @@ object GlobalIndexRangedBench {
     for (op <- Seq("index", "running", "grouped")) {
       call(op); spark.catalog.clearCache()
       val runs = (1 to reps).map { _ =>
-        val j0 = jobs.get()
         peak = 0L; sampling = true
-        val t0 = System.nanoTime()
-        call(op)
-        val s = (System.nanoTime() - t0) / 1e9
+        val (s, rec) = QueryMetrics.measure(spark) {
+          val t0 = System.nanoTime()
+          call(op)
+          (System.nanoTime() - t0) / 1e9
+        }
         sampling = false
         val held = peak
         spark.catalog.clearCache()
-        (s, jobs.get() - j0, held)
+        (s, rec.jobs, held)
       }
       val wall = runs.map(_._1).sorted.apply(reps / 2)
       println(f"  $op%-8s wall ${wall}%6.2f s  jobs ${runs.head._2}%3d  " +

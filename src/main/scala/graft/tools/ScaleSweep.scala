@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{Session, SparkEntry}
 
 /** Scale-robustness sweep: executes EVERY registered query at a chosen scale
   * factor (default sf0.1 — 10× the driver's correctness SF) and reports
@@ -16,12 +15,7 @@ import org.apache.spark.sql.SparkSession
 object ScaleSweep {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     val pats = if (args.length > 1) args(1).split(",").toSeq else Nil

@@ -3,8 +3,8 @@ package org.apache.spark.graftbridge
 import org.apache.spark.SparkContext
 
 /** The listener bus delivers events asynchronously and its drain is
-  * `private[spark]`; specs that count jobs or tasks with a listener wait
-  * here before reading their counts. */
+  * `private[spark]`; [[graft.QueryMetrics]] and specs that count events
+  * with a listener wait here before reading their counts. */
 object ListenerBridge {
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

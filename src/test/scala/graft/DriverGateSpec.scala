@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.graftbridge.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
@@ -10,22 +8,8 @@ class DriverGateSpec extends SparkSpecBase {
 
   /** (jobs, tasks) that `body` ran, and its result. */
   private def counted[T](body: => T): (Int, Int, T) = {
-    val sc = spark.sparkContext
-    ListenerBridge.drain(sc)
-    var jobs = 0
-    var tasks = 0
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        synchronized(jobs += 1)
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        synchronized(tasks += 1)
-    }
-    sc.addSparkListener(l)
-    try {
-      val out = body
-      ListenerBridge.drain(sc)
-      l.synchronized((jobs, tasks, out))
-    } finally sc.removeSparkListener(l)
+    val (out, rec) = QueryMetrics.measure(spark)(body)
+    (rec.jobs, rec.tasks, out)
   }
 
   test("exactly maxRows rows take the driver path, maxRows + 1 do not") {

@@ -6,13 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for Spark-backed suites (one JVM-wide session —
   * getOrCreate dedups across suites run in the same forked test JVM). */
 trait SparkSpecBase extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local(cores = 4)
 
   lazy val sf: String = "/root/testdata/sf0.001"
 

@@ -69,6 +69,25 @@ class DupClustersSpec extends SparkSpecBase {
     assert(DupClusters.connectedComponents(pairs).collect().isEmpty)
   }
 
+  test("connected components: the distributed loop reads the pair list once") {
+    // the pair list's upstream (SimHash candidates, edit verify) is the
+    // costly part; the loop's edge cache must scan it once, not once per
+    // edge direction
+    val read = spark.sparkContext.longAccumulator("pair rows read")
+    val edges = (0L until 40L).map(i => (i, i / 4 * 4 + 4))
+    val rows = spark.sparkContext.parallelize(edges, 4).map { case (a, b) =>
+      read.add(1)
+      org.apache.spark.sql.Row(a, b)
+    }
+    val pairs = spark.createDataFrame(rows, new org.apache.spark.sql.types
+      .StructType().add("ida", "long").add("idb", "long"))
+    val comp = withGate(forceDistributed = true) {
+      DupClusters.connectedComponents(pairs).collect()
+    }
+    assert(comp.length === 41 && comp.forall(_.getLong(1) == 0L))
+    assert(read.value === edges.size)
+  }
+
   test("updateClusters: batch merges relabel via root remap — cluster " +
       "unions, smaller-id newcomer takes over as root, untouched " +
       "clusters pass through, new singleton edges appear") {
