@@ -1,14 +1,15 @@
 package graft
 
 import org.apache.spark.graftbridge.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
 /** Listener behind [[QueryMetrics.measure]]: counts the jobs, completed
-  * stages and ended tasks it hears of, and sums their task metrics. */
+  * stages and ended tasks it hears of, sums their task metrics, and keeps
+  * the [[DriverGate.Decision]]s posted meanwhile. */
 final class QueryMetrics private () extends SparkListener {
   private var jobs = 0
   private var stages = 0
@@ -18,12 +19,18 @@ final class QueryMetrics private () extends SparkListener {
   private var shuffleBytes = 0L
   private var spillBytes = 0L
   private val taskMs = mutable.HashMap.empty[Int, mutable.ArrayBuffer[Long]]
+  private val gates = mutable.ArrayBuffer.empty[DriverGate.Decision]
 
   override def onJobStart(e: SparkListenerJobStart): Unit =
     synchronized(jobs += 1)
 
   override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
     synchronized(stages += 1)
+
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case d: DriverGate.Decision => synchronized(gates += d)
+    case _ =>
+  }
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
     tasks += 1
@@ -49,7 +56,7 @@ final class QueryMetrics private () extends SparkListener {
       .map(ms => ms.max / math.max(1.0, median(ms.toSeq)))
     QueryMetrics.Record(jobs, stages, tasks, runMs / 1e3, gcMs / 1e3,
       shuffleBytes / 1e6, spillBytes / 1e6,
-      if (skews.isEmpty) 1.0 else skews.max)
+      if (skews.isEmpty) 1.0 else skews.max, gates.toList)
   }
 }
 
@@ -57,15 +64,16 @@ object QueryMetrics {
 
   /** What one query cost in Spark: jobs, stages and tasks run, executor
     * run and GC seconds, shuffle MB (read + written) and spill MB (memory
-    * + disk), and task skew — the slowest task over the median task of
-    * its stage, for the most skewed stage of two or more tasks. */
+    * + disk), task skew — the slowest task over the median task of its
+    * stage, for the most skewed stage of two or more tasks — and its
+    * driver-gate decisions in the order they were taken. */
   final case class Record(jobs: Int, stages: Int, tasks: Int,
       executorS: Double, gcS: Double, shuffleMb: Double, spillMb: Double,
-      taskSkew: Double) {
+      taskSkew: Double, gates: Seq[DriverGate.Decision]) {
     override def toString: String =
       f"jobs $jobs stages $stages tasks $tasks exec $executorS%.2f s " +
         f"gc $gcS%.2f s shuffle $shuffleMb%.2f MB spill $spillMb%.2f MB " +
-        f"skew $taskSkew%.1f"
+        f"skew $taskSkew%.1f gates ${gates.size}"
   }
 
   /** `body`'s result and the record of the Spark work it ran. The listener

@@ -398,7 +398,14 @@ object DedupOps {
 
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 12): DataFrame =
-    bandedHammingPairs(simhashSignatures(df, idCol, textCol), maxHamming)
+    simhashPairsReleasable(df, idCol, textCol, maxHamming)._1
+
+  /** [[simhashPairs]] with the release handle of its signature cache
+    * ([[bandedHammingPairsReleasable]]). */
+  def simhashPairsReleasable(df: DataFrame, idCol: String, textCol: String,
+      maxHamming: Int = 12): (DataFrame, () => Unit) =
+    bandedHammingPairsReleasable(simhashSignatures(df, idCol, textCol),
+      maxHamming)
 
   /** Near-dup candidate pairs from ANY 64-bit signature frame
     * (id, simhash) — SimHash text signatures, image dHashes, any LSH
@@ -407,13 +414,19 @@ object DedupOps {
     * holds for dist ≤ 3 — wider dist is best-effort candidate generation,
     * which is the standard trade. The band key is the shuffle key; never
     * all-pairs. */
-  def bandedHammingPairs(sig: DataFrame, maxHamming: Int): DataFrame = {
+  def bandedHammingPairs(sig: DataFrame, maxHamming: Int): DataFrame =
+    bandedHammingPairsReleasable(sig, maxHamming)._1
+
+  /** [[bandedHammingPairs]] with a release handle for its signature cache
+    * (the [[ngramJaccardPairsReleasable]] convention); the plain overload
+    * leaves the cache to the session. */
+  def bandedHammingPairsReleasable(sig: DataFrame, maxHamming: Int)
+      : (DataFrame, () => Unit) = {
     // r16 (guide §5): both sides of the band self-join reference the
     // signature frame — uncached, the WHOLE upstream signature
     // derivation (tokenize+sha256 for SimHash, PNG synth+ImageIO
     // decode+DCT for the media hashes) executed twice per query. The
-    // cache is 2 longs per id; the session (or the registry runners'
-    // per-query clearCache) releases it.
+    // cache is 2 longs per id.
     val sigC = sig.cache()
     val banded = sigC.select(col("id"), col("simhash"),
       explode(array((0 until 4).map(bnd =>
@@ -422,11 +435,12 @@ object DedupOps {
             .bitwiseAND(lit(0xffffL)).as("key"))): _*)).as("bk"))
     val a = banded.select(col("id").as("ida"), col("simhash").as("sa"), col("bk"))
     val b = banded.select(col("id").as("idb"), col("simhash").as("sb"), col("bk"))
-    a.join(b, Seq("bk")).filter(col("ida") < col("idb"))
+    val out = a.join(b, Seq("bk")).filter(col("ida") < col("idb"))
       .select("ida", "idb", "sa", "sb").distinct()
       .withColumn("hamming", SimHash64.hammingDist(col("sa"), col("sb")))
       .filter(col("hamming") <= maxHamming)
       .select("ida", "idb", "hamming")
+    (out, () => { sigC.unpersist(blocking = false); () })
   }
 
   /** Embedding-cosine near-dup pairs with LSH-banded candidate generation:
@@ -533,6 +547,16 @@ object DedupOps {
     * at corpus scale (prefix disagreement ⇒ the docs differ; the standard
     * trade). `confirmed` = dist ≤ maxDistRatio · max(prefix lengths).
     *
+    * Two columns, two DPs: `edit_dist` is the exact distance, while
+    * `confirmed` runs Spark's thresholded `levenshtein(ta, tb, k)` with
+    * k = ⌊maxDistRatio · len_max⌋ (capped at len_max), which gives up
+    * once the distance passes k (−1) and skips pairs whose length gap
+    * alone exceeds it. For an integer distance d, d ≤ r·L exactly when
+    * d ≤ ⌊r·L⌋, so the verdict is the exact one; and a caller that reads
+    * only `confirmed` (CorpusCuration's cluster edges) has the exact DP
+    * pruned from its plan — most candidates are far apart (~1% confirm
+    * on the corpus benchmark), where the thresholded DP stops early.
+    *
     * An arbiter must never return an UNDEFINED verdict: null text reads as
     * the empty string (two null-text docs are trivially identical), and a
     * pair whose id is missing from `docs` is kept — left joins, not inner —
@@ -544,6 +568,8 @@ object DedupOps {
     val t = docs.select(col(idCol).as("__id"),
       coalesce(substring(col(textCol), 1, prefixLen), lit("")).as("__t"))
     val present = col("ta").isNotNull && col("tb").isNotNull
+    val lenMax = greatest(length(col("ta")), length(col("tb")))
+    val k = least(floor(lit(maxDistRatio) * lenMax), lenMax).cast("int")
     // r15: pin the pair frame's partition count before scoring — the
     // levenshtein arbitration is CPU-dense per row but tiny in BYTES
     // (two ids), so AQE's byte-targeted coalescing collapsed it to ~1
@@ -564,11 +590,10 @@ object DedupOps {
       .select(col("ida"), col("idb"),
         when(present, levenshtein(col("ta"), col("tb")).cast("long"))
           .as("edit_dist"),
-        when(present, greatest(length(col("ta")), length(col("tb")))
-          .cast("long")).as("len_max"))
-      .withColumn("confirmed",
-        coalesce(col("edit_dist") <= lit(maxDistRatio) * col("len_max"),
-          lit(false)))
+        when(present, lenMax.cast("long")).as("len_max"),
+        coalesce(when(present,
+          call_function("levenshtein", col("ta"), col("tb"), k) >= 0),
+          lit(false)).as("confirmed"))
   }
 
   /** Benchmark DECONTAMINATION — the GPT-3/PaLM-style n-gram overlap

@@ -21,9 +21,9 @@ import org.apache.spark.sql.functions._
   * self-join, per-pair bounded Levenshtein, the log-diameter CC loop on
   * confirmed pairs only, one broadcast gram join (bench side is tiny), and
   * a pure map-side sampling filter. The exact-dedup survivor frame is the
-  * one diamond (it feeds signature generation, pair texts, clustering,
-  * decontamination, and quality scoring), so it is persisted; the
-  * releasable variant hands the caller its release handle.
+  * one diamond (it feeds signature generation, pair texts, clustering and
+  * decontamination), so it is persisted; the releasable variant hands the
+  * caller its release handle.
   */
 object CorpusCuration {
 
@@ -36,7 +36,8 @@ object CorpusCuration {
       baseRate: Double = 1.5): DataFrame =
     curateReleasable(docs, idCol, textCol, bench, benchTextCol, baseRate)._1
 
-  /** [[curate]] with a release handle for the survivor-frame persist (the
+  /** [[curate]] with a release handle for every frame it caches — the
+    * cleaned, survivor, SimHash-signature and champion frames (the
     * [[graft.etl.GlobalIndex.withGlobalIndexReleasable]] convention). The
     * plain overload leaves the cache to the session (Verify/Bench clear per
     * query); long-lived compositions should release after consuming. */
@@ -52,12 +53,15 @@ object CorpusCuration {
     val keepIds = DedupOps.exactDedup(cleaned, idCol, "clean")
       .select(col("keep").as(idCol))
     // the survivor frame is the pipeline's diamond: signatures, pair
-    // texts, clustering base, decontamination grams, and quality scoring
-    // all read it — persist once instead of re-running the dedup shuffle
+    // texts, the clustering base and the champion attach all read it —
+    // persist once instead of re-running the dedup shuffle
     val surv = cleaned.join(keepIds, Seq(idCol)).persist()
     // 3. near-dup candidates: banded SimHash pairs on the clean text
-    val pairs = DedupOps.simhashPairs(surv, idCol, "clean")
-    // 4. exactness arbitration: prefix-bounded Levenshtein per pair
+    // (their signature cache is released with the rest)
+    val (pairs, releasePairs) = DedupOps.simhashPairsReleasable(surv, idCol,
+      "clean")
+    // 4. exactness arbitration: prefix-bounded Levenshtein per pair; only
+    // the verdict is read, so the plan keeps just the thresholded DP
     val confirmed = DedupOps.editVerify(surv, pairs, idCol, "clean")
       .filter(col("confirmed")).select("ida", "idb")
     // 5. close confirmed pairs into clusters, keep one canonical doc each.
@@ -75,21 +79,22 @@ object CorpusCuration {
     val decon = DedupOps.decontaminate(champions, idCol, "clean",
         bench, benchTextCol)
       .filter(!col("contaminated")).select(idCol)
-    // persisted (r16): read by the quality scorer and the final sample join
-    val cleanCorpus = champions.join(decon, Seq(idCol)).persist()
-    // 7. quality-weighted sampling on the stopword-ratio quality score
-    val quality = TextOps.qualityFeatures(cleanCorpus, idCol, "clean")
-      .select(col(idCol), col("stopword_ratio"))
-    val out = DataMix.weightedSample(cleanCorpus.join(quality, Seq(idCol)),
-        idCol, "stopword_ratio", baseRate)
+    // 7. quality-weighted sampling on the stopword-ratio quality score — a
+    // projection of the decontaminated rows (token array materialized in
+    // its own projection, as in TextOps.qualityFeatures), so the frame is
+    // read once
+    val scored = champions.join(decon, Seq(idCol))
+      .withColumn("__toks", TextOps.tokens(col("clean")))
+      .withColumn("stopword_ratio", TextOps.stopwordRatio(col("__toks")))
+    val out = DataMix.weightedSample(scored, idCol, "stopword_ratio", baseRate)
       .select(col(idCol),
         length(col("clean")).cast("long").as("n_chars_clean"),
         col("cluster_size"), col("stopword_ratio"))
     (out, () => {
       cleaned.unpersist(blocking = false)
       surv.unpersist(blocking = false)
+      releasePairs()
       champions.unpersist(blocking = false)
-      cleanCorpus.unpersist(blocking = false)
       ()
     })
   }

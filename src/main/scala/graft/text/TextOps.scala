@@ -33,8 +33,7 @@ object TextOps {
     * MATERIALIZED token-array column (own projection, see [[qualityFeatures]]):
     * passing `tokens(text)` directly re-splits the text once per referencing
     * output column — the [[graft.dedup.DedupOps.shingles]] pathology. */
-  def qualityColumns(text: Column, toks: Column): Seq[Column] = {
-    val stop = Seq("the", "a", "of", "and", "to", "in", "is")
+  def qualityColumns(text: Column, toks: Column): Seq[Column] =
     Seq(
       length(text).cast("long").as("n_chars"),
       size(toks).cast("long").as("n_tokens"),
@@ -42,10 +41,16 @@ object TextOps {
         greatest(size(toks), lit(1)).cast("double"), 6).as("avg_token_len"),
       round(length(regexp_replace(text, "[^.,!?;:]", "")) /
         greatest(length(text), lit(1)).cast("double"), 6).as("punct_ratio"),
-      round(size(filter(toks, t => lower(t).isin(stop: _*))) /
-        greatest(size(toks), lit(1)).cast("double"), 6).as("stopword_ratio"),
+      stopwordRatio(toks).as("stopword_ratio"),
       round(length(regexp_replace(text, "[^A-Z]", "")) /
         greatest(length(text), lit(1)).cast("double"), 6).as("upper_ratio"))
+
+  /** Share of `toks` (a materialized token-array column, as for
+    * [[qualityColumns]]) that are stopwords, rounded to 6 dp. */
+  def stopwordRatio(toks: Column): Column = {
+    val stop = Seq("the", "a", "of", "and", "to", "in", "is")
+    round(size(filter(toks, t => lower(t).isin(stop: _*))) /
+      greatest(size(toks), lit(1)).cast("double"), 6)
   }
 
   /** Quality features over a document frame, tokenizing each text exactly

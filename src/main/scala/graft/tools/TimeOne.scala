@@ -9,7 +9,8 @@ import graft.{QueryMetrics, Session, SparkEntry}
   * cores). Two runs, both printed — the first includes per-query
   * plan/codegen setup, the second is the warm number — each followed by
   * its [[graft.QueryMetrics]] record (jobs, stages, tasks, executor and
-  * GC time, shuffle and spill, task skew). */
+  * GC time, shuffle and spill, task skew) and one line per driver-gate
+  * decision it holds. */
 object TimeOne {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -36,8 +37,10 @@ object TimeOne {
         }
       }
       println(f"[timeone] $name%s: cold ${runs(0)._1}%.2f s, warm ${runs(1)._1}%.2f s")
-      println(s"[timeone] $name cold: ${runs(0)._2}")
-      println(s"[timeone] $name warm: ${runs(1)._2}")
+      Seq("cold" -> runs(0)._2, "warm" -> runs(1)._2).foreach { case (k, r) =>
+        println(s"[timeone] $name $k: $r")
+        r.gates.foreach(d => println(s"[timeone] $name $k gate: $d"))
+      }
     }
     spark.stop()
   }

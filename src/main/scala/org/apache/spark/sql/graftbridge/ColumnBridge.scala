@@ -38,10 +38,10 @@ object RowProbe {
   import org.apache.spark.sql.catalyst.plans.logical.Sort
   import org.apache.spark.sql.execution.SQLExecution
 
-  /** The rows (None once a budget was passed), and the rows and bytes the
-    * probe read. */
+  /** The rows (None once a budget was passed), the rows and bytes the
+    * probe read, and the rounds (jobs) it read them in. */
   final case class Probe(rows: Option[Array[Row]], seenRows: Long,
-      seenBytes: Long)
+      seenBytes: Long, rounds: Int)
 
   /** Probes `df` in one SQL execution against `maxRows` and the session's
     * byte budget; under both, returns its rows, sorted by Catalyst's
@@ -51,13 +51,17 @@ object RowProbe {
     val conf = ds.sparkSession.sessionState.conf
     val maxBytes = math.max(conf.autoBroadcastJoinThreshold, 0L)
     val qe = ds.queryExecution
-    val (shipped, rows, bytes) = SQLExecution.withNewExecutionId(qe,
+    val (shipped, rows, bytes, rounds) = SQLExecution.withNewExecutionId(qe,
         Some("collect")) {
       qe.executedPlan.resetMetrics()
+      val scaleUp = math.max(conf.limitScaleUpFactor, 2)
       scan(qe.executedPlan.execute(), maxRows, maxBytes,
-        conf.limitInitialNumPartitions, math.max(conf.limitScaleUpFactor, 2))
+        math.max(conf.limitInitialNumPartitions, math.min(scaleUp,
+          ds.sparkSession.sparkContext.defaultParallelism)),
+        scaleUp)
     }
-    if (rows > maxRows || bytes > maxBytes) return Probe(None, rows, bytes)
+    if (rows > maxRows || bytes > maxBytes)
+      return Probe(None, rows, bytes, rounds)
     val output = ds.logicalPlan.output
     if (order.nonEmpty) {
       val sortOrder = ds.orderBy(order: _*).queryExecution.analyzed match {
@@ -70,21 +74,28 @@ object RowProbe {
     val toRow = ds.exprEnc
       .resolveAndBind(output, ds.sparkSession.sessionState.analyzer)
       .createDeserializer()
-    Probe(Some(shipped.map(toRow)), rows, bytes)
+    Probe(Some(shipped.map(toRow)), rows, bytes, rounds)
   }
 
-  /** Runs tasks over growing partition ranges (`executeTake`'s
-    * increments: `initial` partitions, then `scaleUp` times as many as
-    * were read) until every partition is read or a budget is passed. Each
-    * task reads at most the remaining row budget and stops once it passes
-    * the remaining byte budget; a task that reaches either ships no rows. */
+  /** Runs tasks over growing partition ranges (`initial` partitions —
+    * one wave of the cluster's cores, capped at `scaleUp` — then `scaleUp`
+    * times as many as were read, `executeTake`'s increments) until every
+    * partition is read or a budget is passed; returns the shipped rows,
+    * the rows and bytes read, and the rounds run. Each task reads at most
+    * the remaining row budget and stops once it passes the remaining byte
+    * budget; a task that reaches either ships no rows. Each task may ship
+    * up to the whole remaining budget, so a round of n tasks can bring n
+    * budgets to the driver before the sum is checked: the cap keeps the
+    * first round's worst case at `scaleUp` budgets, what `executeTake`'s
+    * second round already risks. */
   private def scan(rdd: RDD[InternalRow], maxRows: Long, maxBytes: Long,
-      initial: Int, scaleUp: Int): (Array[InternalRow], Long, Long) = {
+      initial: Int, scaleUp: Int): (Array[InternalRow], Long, Long, Int) = {
     val total = rdd.partitions.length
     val shipped = Array.newBuilder[InternalRow]
     var rows = 0L
     var bytes = 0L
     var scanned = 0
+    var rounds = 0
     while (scanned < total && rows <= maxRows && bytes <= maxBytes) {
       val n = if (scanned == 0) initial else scanned * scaleUp
       val parts = scanned until math.min(scanned + n, total)
@@ -108,7 +119,8 @@ object RowProbe {
         shipped ++= got
       }
       scanned += parts.length
+      rounds += 1
     }
-    (shipped.result(), rows, bytes)
+    (shipped.result(), rows, bytes, rounds)
   }
 }

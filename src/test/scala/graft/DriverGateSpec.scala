@@ -61,6 +61,34 @@ class DriverGateSpec extends SparkSpecBase {
     assert(allTasks === 64)
   }
 
+  test("under the bound a frame of one wave's partitions is read in one job") {
+    // one wave, capped at spark.sql.limit.scaleUpFactor (4 by default)
+    val n = math.min(spark.sparkContext.defaultParallelism, 4)
+    val df = spark.range(0, 100, 1, n).toDF("id")
+    val (jobs, tasks, got) = counted(DriverGate.rows("spec", df, 1000))
+    assert(got.map(_.length) === Some(100))
+    assert((jobs, tasks) === ((1, n)))
+  }
+
+  test("partitions that each fit the byte budget but not together: the " +
+      "first round ships at most scaleUpFactor budgets") {
+    // 8 partitions of 375 one-long UnsafeRows (16 bytes each): 6,000 bytes
+    // per partition against a 10,000-byte budget, 48,000 in all
+    val df = spark.range(0, 3000, 1, 8).toDF("id")
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.limit.scaleUpFactor")
+    try {
+      spark.conf.set(keys(0), "10000")
+      // a cap below the spec session's 4 cores, so an uncapped wave shows
+      spark.conf.set(keys(1), "2")
+      val (jobs, tasks, p) = counted(
+        org.apache.spark.sql.graftbridge.RowProbe(df, 1000000L, Nil))
+      assert(p.rows.isEmpty)
+      assert((jobs, tasks, p.rounds) === ((1, 2, 1)))
+      assert(p.seenBytes === 12000L && p.seenBytes <= 2 * 10000L)
+    } finally keys.foreach(spark.conf.unset)
+  }
+
   test("the driver sort equals orderBy for asc/desc, nulls, NaN, -0.0, " +
       "non-ASCII strings and binary") {
     val d: Seq[java.lang.Double] = Seq[java.lang.Double](1.5, -0.0, 0.0,

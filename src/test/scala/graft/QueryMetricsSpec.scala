@@ -53,4 +53,16 @@ class QueryMetricsSpec extends SparkSpecBase {
     assert(raw2 === ((1, 1, 1)))
     assert(second.shuffleMb === 0.0)
   }
+
+  test("the record holds each gate decision, its path and its rounds") {
+    val df = spark.range(0, 10, 1, 2).toDF("id")
+    val (_, driver) = QueryMetrics.measure(spark)(
+      DriverGate.rows("spec", df, 100))
+    assert(driver.gates.map(d => (d.op, d.path, d.rows, d.rounds)) ===
+      Seq(("spec", "driver", 10L, 1)))
+    val (_, forced) = QueryMetrics.measure(spark)(
+      withGate(forceDistributed = true)(DriverGate.rows("spec", df, 100)))
+    assert(forced.gates.map(d => (d.path, d.rounds)) === Seq(("forced", 0)))
+    assert(forced.jobs === 0)
+  }
 }

@@ -132,6 +132,76 @@ class DedupOpsSpec extends SparkSpecBase {
     assert(out.values.forall(!_.isNullAt(4)), "confirmed is never null")
   }
 
+  test("editVerify: the thresholded verdict equals edit_dist <= 0.2 * len_max") {
+    // seeded random pairs over an ASCII and a multi-byte alphabet (a
+    // supplementary-plane emoji included), b = a with 0-10 random edits so
+    // the distances straddle the bound, plus the edge cases by hand
+    val rnd = new scala.util.Random(11)
+    val alphabets = Seq("ab c".map(_.toString),
+      Seq("é", "日", "本", "a", " ", "\uD83D\uDE42"))
+    def word(al: Seq[String], n: Int) = Seq.fill(n)(al(rnd.nextInt(al.size))).mkString
+    val random = (0 until 400).map { i =>
+      val al = alphabets(i % 2)
+      val a = word(al, 1 + rnd.nextInt(40))
+      val b = (0 until rnd.nextInt(11)).foldLeft(a) { (s, _) =>
+        val at = rnd.nextInt(s.length + 1)
+        rnd.nextInt(3) match {
+          case 0 => s.take(at) + word(al, 1) + s.drop(at)
+          case 1 => s.take(at) + s.drop(at + 1)
+          case _ => s.take(at) + word(al, 1) + s.drop(at + 1)
+        }
+      }
+      (a, b)
+    }
+    val base = "abcdefghijklmnopqrst" // L = 20, bound floor(0.2 * 20) = 4
+    val edges = Seq(
+      base -> ("XXXX" + base.drop(4)),           // distance 4: at the bound
+      base -> ("XXXXX" + base.drop(5)),          // distance 5: one past it
+      ("a" * 20) -> ("a" * 10),                  // length gap 10 > bound 4
+      "" -> "")
+    val texts = (random ++ edges).zipWithIndex.flatMap { case ((a, b), i) =>
+      Seq((2L * i, Option(a)), (2L * i + 1, Option(b))) } ++
+      Seq((-1L, Option.empty[String]), (-2L, Option.empty[String]))
+    val pairs = (texts.indices.filter(_ % 2 == 0).map(i =>
+        (texts(i)._1, texts(i + 1)._1)).filter(_._1 >= 0) ++
+      Seq((-2L, -1L), (-1L, 0L), (0L, 999999L))).toDF("ida", "idb")
+    val out = DedupOps.editVerify(texts.toDF("doc_id", "text"), pairs,
+      "doc_id", "text").collect()
+    assert(out.length === pairs.count())
+    out.foreach { r =>
+      val want = !r.isNullAt(2) && r.getLong(2) <= 0.2 * r.getLong(3)
+      assert(r.getBoolean(4) === want, r)
+    }
+    val byPair = out.map(r => (r.getLong(0), r.getLong(1)) -> r).toMap
+    val edge = random.size * 2L
+    assert(byPair((edge, edge + 1)).getLong(2) === 4L &&
+      byPair((edge, edge + 1)).getBoolean(4))
+    assert(byPair((edge + 2, edge + 3)).getLong(2) === 5L &&
+      !byPair((edge + 2, edge + 3)).getBoolean(4))
+    assert(!byPair((edge + 4, edge + 5)).getBoolean(4))
+    assert(byPair((edge + 6, edge + 7)).getBoolean(4), "empty vs empty")
+    assert(byPair((-2L, -1L)).getBoolean(4), "null vs null")
+    assert(!byPair((0L, 999999L)).getBoolean(4), "missing id")
+    assert(out.count(_.getBoolean(4)) > 50 && out.count(!_.getBoolean(4)) > 50,
+      "the random pairs straddle the bound")
+  }
+
+  test("editVerify: a confirmed-only plan keeps just the thresholded DP") {
+    import org.apache.spark.sql.catalyst.expressions.Levenshtein
+    def levs(df: org.apache.spark.sql.DataFrame): Seq[Levenshtein] =
+      df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(
+        _.collect { case l: Levenshtein => l }))
+    val texts = Seq((1L, "the quick brown fox"), (2L, "the quick brown cat"))
+      .toDF("doc_id", "text")
+    val full = DedupOps.editVerify(texts, Seq((1L, 2L)).toDF("ida", "idb"),
+      "doc_id", "text")
+    val verdictOnly = full.filter("confirmed").select("ida", "idb")
+    assert(levs(verdictOnly).map(_.threshold.isDefined) === Seq(true))
+    assert(levs(full).map(_.threshold.isDefined).sorted === Seq(false, true))
+    assert(verdictOnly.collect().map(r => (r.getLong(0), r.getLong(1))) ===
+      Array((1L, 2L)))
+  }
+
   test("decontaminate flags docs sharing an n-gram with the benchmark, counts distinct grams") {
     val bench = Seq((100L, "the quick brown fox jumps over the lazy dog"))
       .toDF("doc_id", "text")

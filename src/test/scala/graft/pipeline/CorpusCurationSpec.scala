@@ -58,4 +58,24 @@ class CorpusCurationSpec extends SparkSpecBase {
     assert(out.count() === 0)
     spark.catalog.clearCache()
   }
+
+  // Pinned to the gated path: the distributed connected-components loop
+  // keeps its per-round localCheckpoint RDDs persisted with no release
+  // handle (the ContextCleaner reclaims them once unreferenced), so the
+  // check would not isolate curate's own caches there. The check is "no
+  // RDD added", not set equality, because the ContextCleaner may drop
+  // older suites' RDDs meanwhile.
+  test("curate: release() leaves the session's cached RDDs as they were") {
+    withGate(forceDistributed = false) {
+      val sc = spark.sparkContext
+      def added(before: Set[Int]) = sc.getPersistentRDDs.keySet.toSet -- before
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val (out, release) = CorpusCuration.curateReleasable(
+        docs, "doc_id", "text", bench, "text", baseRate = 1e6)
+      assert(out.count() === 3)
+      assert(added(before).nonEmpty)
+      release()
+      assert(added(before) === Set.empty[Int])
+    }
+  }
 }
