@@ -26,7 +26,9 @@ import org.apache.spark.sql.graftbridge.RowProbe
   * rows come back sorted by Catalyst's ordering of `df.orderBy(order)`
   * (nulls, NaN, -0.0, strings and binary compare as in Spark); it must be
   * a TOTAL order for a fold to match its distributed plan row for row,
-  * since ties come back in arbitrary order. [[ForceDistributedConf]]
+  * since ties come back in arbitrary order. A frame already on the driver
+  * (its plan a local table scan) is read under the same budgets without a
+  * job (`rounds=0`). [[ForceDistributedConf]]
   * skips every gate without a job. Each decision logs `op=…
   * path=driver|distributed|forced rows=… bytes=… rounds=…` (what the
   * probe read, in how many jobs) at INFO on logger `graft.gate`, and is

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** A registered query: the Spark implementation plus, when the operator is
   * SQL-expressible, an equivalent DuckDB oracle over the same parquet tables.
@@ -52,7 +53,9 @@ object Par {
   }
 }
 
-/** Loaders for the driver-generated TPC-H-ish tables (TESTDATA.md). */
+/** Loaders for the driver-generated TPC-H-ish tables (TESTDATA.md). Each
+  * table's schema is inferred once per table version and then passed to
+  * the reader ([[schemaOf]]), so a read runs no schema-inference job. */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
@@ -82,9 +85,50 @@ object Tables {
     }
   }
 
+  /** The table `name` under `dir`, read with its memoised schema (see
+    * [[schemaOf]]); `events.ts` is normalized ([[normalizeTs]]). */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val df = spark.read.schema(schemaOf(spark, path)).parquet(path)
     if (name == "events") normalizeTs(df) else df
+  }
+
+  /** A table version and the session confs its inferred schema depends on:
+    * the path, each leaf file's (name, length, modification time), and the
+    * set `spark.sql.parquet.*` / `spark.sql.legacy.parquet.*` confs
+    * (`nanosAsLong` turns a TIMESTAMP(NANOS) column into a long). */
+  private final case class SchemaKey(path: String,
+      files: Seq[(String, Long, Long)], confs: Seq[(String, String)])
+
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[SchemaKey, StructType]()
+
+  /** The schema `spark.read.parquet(path)` infers, inferred once per table
+    * version — what a metastore would hold for the table. Inference runs a
+    * Spark job; a rewritten table (another file, length or modification
+    * time) or a changed parquet conf is inferred again. The key holds no
+    * session, so a stopped session is not kept alive, and no data is
+    * cached. */
+  private def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a missing table fails with the reader's own error
+    if (!fs.exists(p)) return spark.read.parquet(path).schema
+    val files = Seq.newBuilder[(String, Long, Long)]
+    val it = fs.listFiles(p, true)
+    while (it.hasNext) {
+      val f = it.next()
+      files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    val confs = spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") ||
+        k.startsWith("spark.sql.legacy.parquet.") }.sorted
+    val key = SchemaKey(path, files.result().sorted, confs)
+    Option(schemas.get(key)).getOrElse {
+      val s = spark.read.parquet(path).schema
+      schemas.putIfAbsent(key, s)
+      s
+    }
   }
 
   def lineitem(s: SparkSession, d: String): DataFrame = apply(s, d, "lineitem")

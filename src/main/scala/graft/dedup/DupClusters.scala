@@ -52,11 +52,15 @@ object DupClusters {
     * Checkpoint FILES under the directory are the CALLER's to delete —
     * they must outlive consumption of the returned frame, so the loop
     * cannot clean them up itself. The default (local) is right for
-    * single-JVM runs and tests. */
+    * single-JVM runs and tests; there each round's locally checkpointed
+    * RDD is unpersisted the same way once the following round has
+    * materialized, so only the returned frame's RDD stays persisted. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
       checkpointDir: Option[String] = None): DataFrame = {
     checkpointDir.foreach(pairs.sparkSession.sparkContext.setCheckpointDir)
-    val roundCaches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    // one release per truncated frame: its persist on the reliable path,
+    // its locally checkpointed RDD on the local one
+    val roundCaches = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
     // Checkpoint each round, then RE-WRAP the result as a fresh LogicalRDD
     // with DEFAULT stats (createDataFrame over the truncated RDD). Without
     // the wrap, Dataset.checkpoint's rewriteStatsAndConstraints copies the
@@ -75,17 +79,23 @@ object DupClusters {
         if (checkpointDir.isDefined) {
           val cached = df.persist(
             org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          roundCaches += cached
+          roundCaches += (() => { cached.unpersist(blocking = false); () })
           cached.checkpoint(eager = false)
-        } else df.localCheckpoint(eager = false)
+        } else {
+          val local = df.localCheckpoint(eager = false)
+          local.queryExecution.logical.collectFirst {
+            case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+          }.foreach(rdd =>
+            roundCaches += (() => { rdd.unpersist(blocking = false); () }))
+          local
+        }
       df.sparkSession.createDataFrame(cp.rdd, cp.schema)
     }
-    // drop caches from rounds before the one that just materialized —
-    // the checkpointed files carry the state from here on
+    // drop what rounds before the one that just materialized hold — the
+    // checkpointed files (reliable) or that round's own local checkpoint
+    // blocks carry the state from here on
     def releaseOldRounds(keep: Int): Unit =
-      while (roundCaches.length > keep) {
-        roundCaches.remove(0).unpersist(blocking = false)
-      }
+      while (roundCaches.length > keep) roundCaches.remove(0)()
     val fwd = pairs.select(col("ida").cast("long").as("a"),
       col("idb").cast("long").as("b"))
     // r15 size-adaptive fast path (the AQE broadcast-threshold analogue,
@@ -183,8 +193,9 @@ object DupClusters {
       it += 1
     }
     edges.unpersist(blocking = false)
-    // the final round's prop cache is dead weight (only next is returned);
-    // next's cache backs the returned frame until the caller consumes it
+    // the final round's prop is dead weight (only next is returned);
+    // next's persisted RDD backs the returned frame until the caller
+    // consumes it
     releaseOldRounds(keep = 1)
     labels
   }

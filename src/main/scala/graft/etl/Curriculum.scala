@@ -31,14 +31,14 @@ object Curriculum {
   def curriculumOrder(df: DataFrame, idCol: String, qualityCol: String,
       nBands: Int, seed: Long): DataFrame = {
     require(nBands >= 1)
-    val ranked = GlobalIndex.withGlobalIndex(
-      df, Seq(col(qualityCol).desc, col(idCol)), indexCol = "__rank")
-    val n = df.agg(count(lit(1)).as("__n"))
-    ranked.crossJoin(broadcast(n))
-      .withColumn("band", expr(s"((__rank - 1) * $nBands) div __n"))
+    // the row count is the core's
+    val (ranked, _, n) = GlobalIndex.withGlobalRunning(
+      df, Seq(col(qualityCol).desc, col(idCol)), Nil, indexCol = "__rank")
+    ranked
+      .withColumn("band", expr(s"((__rank - 1) * $nBands) div ${n}L"))
       .withColumn("shuffle_key", md5(concat_ws(":", lit(seed.toString),
         col(idCol).cast("string"))))
-      .drop("__rank", "__n")
+      .drop("__rank")
   }
 
   /** q_p32_curriculum: the documents table in 4 quality bands (doc

@@ -82,10 +82,6 @@ object GlobalIndex {
     (r.frame, r.release)
   }
 
-  def withGlobalCumsum(df: DataFrame, order: Seq[Column], valueCol: Column,
-      cumsumCol: String = "cumsum_excl", numPartitions: Int = 0): DataFrame =
-    withGlobalCumsumReleasable(df, order, valueCol, cumsumCol, numPartitions)._1
-
   /** Generalized single-partition-window replacement: over `order`,
     * computes an optional global row index plus an EXCLUSIVE global prefix
     * sum for EACH of `sums` (valueCol → output name), and returns the
@@ -96,6 +92,11 @@ object GlobalIndex {
     * values count as 0 (the [[withGlobalCumsumReleasable]] convention);
     * `order` must be a total order for deterministic per-row sums
     * (value-cell frames — one row per distinct value — always qualify).
+    * The totals and the count are exact on both paths (the driver fold's
+    * sums, the ranged path's counts collect), so a caller that needs a
+    * grand total or `n` takes it from here as a literal and never
+    * aggregates the input again — a second aggregate would run the
+    * input's upstream once more after the gate probe already ran it.
     * On the ranged path the range cache stays for the session
     * (boundary-resample hazard). */
   def withGlobalRunning(df: DataFrame, order: Seq[Column],

@@ -43,18 +43,18 @@ object TemporalSplit {
       expr(s"unix_micros($tsCol)").as("us"))
       .withColumn("sec", expr("us div 1000000"))
     val cells = base.groupBy("sec").agg(count(lit(1)).as("c"))
-    val tot = cells.agg(sum("c").as("n"))
     // r16 (guide §2.2): the cumulative count formerly ran through a
     // single-partition `Window.orderBy(sec)` — one row per distinct
     // SECOND, i.e. 31M single-partition rows for a year of events. The
     // distributed prefix sum (exclusive) + the cell's own count is the
-    // identical inclusive integer cumsum, range-partitioned.
-    val cum = GlobalIndex.withGlobalCumsum(
-        cells, Seq(col("sec")), col("c"), "cx")
-      .withColumn("cum", col("cx") + col("c"))
+    // identical inclusive integer cumsum, range-partitioned; the row
+    // total is the core's grand total.
+    val (cx, totals, _) = GlobalIndex.withGlobalRunning(
+      cells, Seq(col("sec")), Seq(col("c") -> "cx"))
+    val cum = cx.withColumn("cum", col("cx") + col("c"))
     // nearest-rank: smallest second with cum >= ceil(n * pct / 100)
-    val boundary = cum.join(broadcast(tot))
-      .filter(col("cum") * 100 >= col("n") * fracPct)
+    val boundary = cum
+      .filter(col("cum") * 100 >= lit(totals(0)) * fracPct)
       .agg(min("sec").as("boundary_sec"))
     base.join(broadcast(boundary))
       .withColumn("role",

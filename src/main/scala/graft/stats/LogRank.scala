@@ -39,17 +39,17 @@ object LogRank {
       sum(when(col("arm") === "a", 1L).otherwise(0L)).as("alla"),
       sum("ev").as("d"),
       sum(when(col("arm") === "a", col("ev")).otherwise(0L)).as("da"))
-    val tot = cells.agg(sum("all").as("nn"), sum("alla").as("nna"))
     // r16 (guide §2.2): risk-set sizes are totals minus the EXCLUSIVE
     // prefix sums over event-time cells — both computed off one
     // range-partitioned cache instead of the former single-partition
-    // Window.orderBy(t) funnel (one row per distinct time)
-    val running = graft.etl.GlobalIndex.withGlobalRunning(
+    // Window.orderBy(t) funnel (one row per distinct time); the totals
+    // are the core's grand totals
+    val (running, totals, nCells) = graft.etl.GlobalIndex.withGlobalRunning(
       cells, Seq(col("t")),
-      Seq(col("all") -> "__xall", col("alla") -> "__xalla"))._1
-    val risk = running.crossJoin(broadcast(tot))
-      .withColumn("n", col("nn") - col("__xall"))
-      .withColumn("na", col("nna") - col("__xalla"))
+      Seq(col("all") -> "__xall", col("alla") -> "__xalla"))
+    val risk = running
+      .withColumn("n", lit(totals(0)) - col("__xall"))
+      .withColumn("na", lit(totals(1)) - col("__xalla"))
       .filter(col("d") > 0)
     val eTree = col("d").cast("double") * col("na") / col("n")
     val vTree = eTree *
@@ -60,14 +60,15 @@ object LogRank {
       when(col("n") > 1, floor(vTree * lit(1e6)).cast("long"))
         .otherwise(0L).as("v"))
     // a global aggregate (not a groupBy): a series with zero deaths
-    // still reports its one row, with explicit zeros
+    // still reports its one row, with explicit zeros; n_subjects is a SUM
+    // over the cells, NULL when there are none
+    val nSubjects = if (nCells == 0) lit(null).cast("long") else lit(totals(0))
     terms.agg(
         coalesce(sum("d"), lit(0L)).as("deaths"),
         coalesce(sum("da"), lit(0L)).as("o_a"),
         coalesce(sum("e"), lit(0L)).as("e_a_micro"),
         coalesce(sum("v"), lit(0L)).as("v_micro"))
-      .crossJoin(broadcast(tot))
-      .select(col("nn").as("n_subjects"), col("deaths"), col("o_a"),
+      .select(nSubjects.as("n_subjects"), col("deaths"), col("o_a"),
         col("e_a_micro"),
         (col("deaths") - col("o_a")).as("o_b"),
         (col("deaths") * 1000000L - col("e_a_micro")).as("e_b_micro"),

@@ -34,19 +34,17 @@ object QuantileMap {
     * the reference value at that rank. */
   def quantileMap(sample: DataFrame, valCol: String, ref: DataFrame,
       refValCol: String): DataFrame = {
-    def cumCounts(df: DataFrame, c: String) = {
+    // (cum table, sample size): the size is the core's grand total
+    def cumCounts(df: DataFrame, c: String): (DataFrame, Long) = {
       val cnt = df.groupBy(col(c).as("v")).agg(count(lit(1)).as("c"))
-      graft.etl.GlobalIndex
-        .withGlobalCumsum(cnt, Seq(col("v")), col("c"), "cx")
-        .withColumn("cum", col("cx") + col("c")).drop("cx")
+      val (cx, totals, _) = graft.etl.GlobalIndex
+        .withGlobalRunning(cnt, Seq(col("v")), Seq(col("c") -> "cx"))
+      (cx.withColumn("cum", col("cx") + col("c")).drop("cx"), totals(0))
     }
-    val a = cumCounts(sample, valCol)
-    val b = cumCounts(ref, refValCol)
-    val na = a.agg(sum("c").as("na"))
-    val nb = b.agg(sum("c").as("nb"))
-    a.crossJoin(broadcast(na)).crossJoin(broadcast(nb))
-      .withColumn("rank_ref",
-        expr("(cum * nb + na - 1) div na"))
+    val (a, na) = cumCounts(sample, valCol)
+    val (b, nb) = cumCounts(ref, refValCol)
+    a.withColumn("rank_ref",
+        expr(s"(cum * ${nb}L + ${na}L - 1) div ${na}L"))
       .join(broadcast(b.select(col("v").as("bv"),
           (col("cum") - col("c")).as("blo"), col("cum").as("bhi"))),
         col("rank_ref") > col("blo") && col("rank_ref") <= col("bhi"))

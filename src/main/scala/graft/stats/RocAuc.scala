@@ -61,10 +61,11 @@ object RocAuc {
     // r16 (guide §2.2): "strictly higher" is the EXCLUSIVE prefix sum in
     // descending score order — the distributed two-pass scheme replaces
     // the former single-partition Window.orderBy(desc) funnel
-    val above = graft.etl.GlobalIndex.withGlobalRunning(
-        cnt, Seq(col("__s").desc), Seq(col("c") -> "above"))._1
-      .select("__s", "above")
-    val n = rows.count()
+    val (running, totals, _) = graft.etl.GlobalIndex.withGlobalRunning(
+      cnt, Seq(col("__s").desc), Seq(col("c") -> "above"))
+    val above = running.select("__s", "above")
+    // the row count is the core's grand total of the score counts
+    val n = totals(0)
     val ranked = rows
       .withColumn("rn", row_number().over(
         Window.partitionBy("__s").orderBy("__id")).cast("long"))

@@ -48,11 +48,11 @@ object Survival {
     // the ln-S sum only reads rows before any dead end, where every term
     // is non-null — so the null-skipping window sum equals the
     // null-as-0 prefix sum there.
-    val total = cells.agg(sum(col("d") + col("cns")).as("n"))
-    val risk = graft.etl.GlobalIndex.withGlobalRunning(
-        cells, Seq(col("t")), Seq((col("d") + col("cns")) -> "left_thru"))._1
-      .crossJoin(broadcast(total))
-      .withColumn("n_risk", col("n") - col("left_thru"))
+    // the subject total is the core's grand total of d + cns
+    val (running, totals, _) = graft.etl.GlobalIndex.withGlobalRunning(
+      cells, Seq(col("t")), Seq((col("d") + col("cns")) -> "left_thru"))
+    val risk = running
+      .withColumn("n_risk", lit(totals(0)) - col("left_thru"))
     // per-death-time log term; a full-risk-set death (n = d) zeroes S
     val terms = risk.filter(col("d") > 0)
       .withColumn("dead_end", col("d") === col("n_risk"))

@@ -371,11 +371,10 @@ object QualityClassifier {
     val cnt = scored.groupBy(col(zCol).as("z"))
       .agg(count(lit(1)).as("c"),
         sum(when(col(yCol) === 1.0, 1L).otherwise(0L)).as("p"))
-    val cum = graft.etl.GlobalIndex.withGlobalCumsum(
-      cnt, Seq(col("z")), col("c"), "cx")
-    val tot = cnt.agg(sum("c").as("n"))
-    cum.crossJoin(broadcast(tot))
-      .withColumn("bin", expr(s"(cx * ${bins}L) div n"))
+    // the row total is the core's grand total of the counts
+    val (cum, totals, _) = graft.etl.GlobalIndex.withGlobalRunning(
+      cnt, Seq(col("z")), Seq(col("c") -> "cx"))
+    cum.withColumn("bin", expr(s"(cx * ${bins}L) div ${totals(0)}L"))
       .groupBy("bin")
       .agg(sum("c").as("n"), sum("p").as("n_pos"),
         min("z").as("zmin"), max("z").as("zmax"))

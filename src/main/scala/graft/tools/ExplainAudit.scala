@@ -1148,11 +1148,13 @@ object ExplainAudit {
       "argmax is an aggregate, never a data-sized sort" ->
         (_.contains("partial_max")))
     audit("q_m53_logrank",
-      // subject collapse + time cells + one scalar reduce
+      // subject collapse + time cells + one scalar reduce; the totals are
+      // the GlobalIndex core's, so no aggregate of the cells attaches
       "time cells partial map-side" -> (_.contains("partial_sum")),
-      "totals attach as broadcast 1-row frames" ->
-        (p => p.contains("BroadcastNestedLoopJoin") &&
-          !p.contains("CartesianProduct")))
+      "totals are literals: exactly one BroadcastNestedLoopJoin (the " +
+        "observation edge's 1-row attach) and no CartesianProduct" ->
+        (p => """\(\d+\) BroadcastNestedLoopJoin""".r.findAllIn(p)
+          .size == 1 && !p.contains("CartesianProduct")))
     audit("q_m54_jackknife",
       // ONE (group, bucket) collapse; totals, leave-one-out ratios and
       // the variance run over groups-x-B cells

@@ -36,7 +36,7 @@ object RowProbe {
   import org.apache.spark.sql.catalyst.InternalRow
   import org.apache.spark.sql.catalyst.expressions.{RowOrdering, UnsafeRow}
   import org.apache.spark.sql.catalyst.plans.logical.Sort
-  import org.apache.spark.sql.execution.SQLExecution
+  import org.apache.spark.sql.execution.{LocalTableScanExec, SQLExecution}
 
   /** The rows (None once a budget was passed), the rows and bytes the
     * probe read, and the rounds (jobs) it read them in. */
@@ -45,7 +45,9 @@ object RowProbe {
 
   /** Probes `df` in one SQL execution against `maxRows` and the session's
     * byte budget; under both, returns its rows, sorted by Catalyst's
-    * ordering of `df.orderBy(order)` when `order` is given. */
+    * ordering of `df.orderBy(order)` when `order` is given. A plan that is
+    * already on the driver (a `LocalTableScanExec`, such as a local frame
+    * plus literal columns) is read without a job, in 0 rounds. */
   def apply(df: DataFrame, maxRows: Long, order: Seq[Column]): Probe = {
     val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
     val conf = ds.sparkSession.sessionState.conf
@@ -54,11 +56,18 @@ object RowProbe {
     val (shipped, rows, bytes, rounds) = SQLExecution.withNewExecutionId(qe,
         Some("collect")) {
       qe.executedPlan.resetMetrics()
-      val scaleUp = math.max(conf.limitScaleUpFactor, 2)
-      scan(qe.executedPlan.execute(), maxRows, maxBytes,
-        math.max(conf.limitInitialNumPartitions, math.min(scaleUp,
-          ds.sparkSession.sparkContext.defaultParallelism)),
-        scaleUp)
+      qe.executedPlan match {
+        case local: LocalTableScanExec =>
+          val (r, b, got) = take(local.executeCollect().iterator,
+            maxRows + 1, maxBytes)
+          (got.toArray[InternalRow], r, b, 0)
+        case plan =>
+          val scaleUp = math.max(conf.limitScaleUpFactor, 2)
+          scan(plan.execute(), maxRows, maxBytes,
+            math.max(conf.limitInitialNumPartitions, math.min(scaleUp,
+              ds.sparkSession.sparkContext.defaultParallelism)),
+            scaleUp)
+      }
     }
     if (rows > maxRows || bytes > maxBytes)
       return Probe(None, rows, bytes, rounds)
@@ -101,19 +110,9 @@ object RowProbe {
       val parts = scanned until math.min(scanned + n, total)
       val rowBudget = maxRows + 1 - rows
       val byteBudget = maxBytes - bytes
-      rdd.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) => {
-        val out = Array.newBuilder[UnsafeRow]
-        var r = 0L
-        var b = 0L
-        while (r < rowBudget && b <= byteBudget && it.hasNext) {
-          val row = it.next().asInstanceOf[UnsafeRow].copy()
-          out += row
-          r += 1
-          b += row.getSizeInBytes
-        }
-        val over = r >= rowBudget || b > byteBudget
-        (r, b, if (over) Array.empty[UnsafeRow] else out.result())
-      }, parts).foreach { case (r, b, got) =>
+      rdd.sparkContext.runJob(rdd,
+          (it: Iterator[InternalRow]) => take(it, rowBudget, byteBudget),
+          parts).foreach { case (r, b, got) =>
         rows += r
         bytes += b
         shipped ++= got
@@ -122,5 +121,23 @@ object RowProbe {
       rounds += 1
     }
     (shipped.result(), rows, bytes, rounds)
+  }
+
+  /** One partition's read: at most `rowBudget` rows, stopping once past
+    * `byteBudget` bytes; the rows and bytes read, and the rows themselves
+    * unless a budget was reached. */
+  private def take(it: Iterator[InternalRow], rowBudget: Long,
+      byteBudget: Long): (Long, Long, Array[UnsafeRow]) = {
+    val out = Array.newBuilder[UnsafeRow]
+    var r = 0L
+    var b = 0L
+    while (r < rowBudget && b <= byteBudget && it.hasNext) {
+      val row = it.next().asInstanceOf[UnsafeRow].copy()
+      out += row
+      r += 1
+      b += row.getSizeInBytes
+    }
+    val over = r >= rowBudget || b > byteBudget
+    (r, b, if (over) Array.empty[UnsafeRow] else out.result())
   }
 }

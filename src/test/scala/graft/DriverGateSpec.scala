@@ -89,6 +89,32 @@ class DriverGateSpec extends SparkSpecBase {
     } finally keys.foreach(spark.conf.unset)
   }
 
+  test("a frame already on the driver is probed without a job, under the " +
+      "same budgets and ordering") {
+    val rows = new scala.util.Random(3).shuffle((0 until 50).map(i =>
+      Row(i % 7, i.toLong)))
+    val schema = StructType(Seq(StructField("k", IntegerType),
+      StructField("id", LongType)))
+    // a local relation plus a literal column plans as a LocalTableScan
+    val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      schema).withColumn("one", org.apache.spark.sql.functions.lit(1L))
+    val order = Seq(col("k").desc, col("id"))
+    val (jobs, _, got) = counted(DriverGate.rows("spec", local, 100, order))
+    assert(jobs === 0)
+    val viaJobs = DriverGate.rows("spec", local.repartition(3), 100, order)
+    assert(got.map(_.toSeq) === viaJobs.map(_.toSeq))
+    assert(got.get.toSeq === local.orderBy(order: _*).collect().toSeq)
+    // the row and byte budgets hold as on the job path
+    assert(DriverGate.rows("spec", local, 49).isEmpty)
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    try {
+      spark.conf.set(key, "100")
+      val (j, _, p) = counted(
+        org.apache.spark.sql.graftbridge.RowProbe(local, 100, Nil))
+      assert(p.rows.isEmpty && p.rounds === 0 && j === 0)
+    } finally spark.conf.unset(key)
+  }
+
   test("the driver sort equals orderBy for asc/desc, nulls, NaN, -0.0, " +
       "non-ASCII strings and binary") {
     val d: Seq[java.lang.Double] = Seq[java.lang.Double](1.5, -0.0, 0.0,

@@ -7,13 +7,9 @@ import org.scalatest.BeforeAndAfterAll
   * takes the distributed path that runs at scale (for GlobalIndex, the
   * range-partitioned one). Spec inputs are far below the gates' bounds, so
   * the suite as written checks the driver paths; the re-run checks the
-  * same assertions on the distributed ones. `rerun` picks the tests to
-  * repeat (all by default). */
+  * same assertions on the distributed ones. Each ranged suite re-runs its
+  * whole parent suite, tests that reach no gate included. */
 trait RangedGate extends SparkSpecBase with BeforeAndAfterAll {
-  protected def rerun(testName: String): Boolean = true
-
-  override def testNames: Set[String] = super.testNames.filter(rerun)
-
   override protected def beforeAll(): Unit = {
     super.beforeAll()
     spark.conf.set(graft.DriverGate.ForceDistributedConf, "true")
@@ -33,13 +29,10 @@ class PaddingReportRangedSpec extends etl.PaddingReportSpec with RangedGate
 class ShuffleQualityRangedSpec extends etl.ShuffleQualitySpec with RangedGate
 class CurriculumRangedSpec extends etl.CurriculumSpec with RangedGate
 class UniMaxRangedSpec extends etl.UniMaxSpec with RangedGate
-class EmbargoSplitRangedSpec extends etl.SplitSkewSpec with RangedGate {
-  override protected def rerun(t: String): Boolean = !t.startsWith("skew report")
-}
-class SeededShuffleRangedSpec extends dedup.DedupOpsSpec with RangedGate {
-  override protected def rerun(t: String): Boolean = t.startsWith("seeded shuffle")
-}
+class EmbargoSplitRangedSpec extends etl.SplitSkewSpec with RangedGate
+class SeededShuffleRangedSpec extends dedup.DedupOpsSpec with RangedGate
 class DunnRangedSpec extends stats.DunnSpec with RangedGate
+class QuantileMapRangedSpec extends stats.QuantileMapSpec with RangedGate
 class LogRankRangedSpec extends stats.LogRankSpec with RangedGate
 class RocAucRangedSpec extends stats.RocAucSpec with RangedGate
 class SurvivalRangedSpec extends stats.SurvivalSpec with RangedGate
@@ -47,13 +40,9 @@ class BestFitPackRangedSpec extends text.BestFitPackSpec with RangedGate
 class DsirRangedSpec extends text.DsirSpec with RangedGate
 class NgramLmRangedSpec extends text.NgramLmSpec with RangedGate
 class CalibrationRangedSpec extends text.CalibrationSpec with RangedGate
-class TextOpsPackRangedSpec extends text.TextOpsSpec with RangedGate {
-  override protected def rerun(t: String): Boolean = t.contains("pack")
-}
+class TextOpsPackRangedSpec extends text.TextOpsSpec with RangedGate
 class SemanticAdaptiveRangedSpec extends sim.SemanticAdaptiveSpec with RangedGate
-class SmoteRangedSpec extends metrics.SamplerSpec with RangedGate {
-  override protected def rerun(t: String): Boolean = t.contains("smote")
-}
+class SmoteRangedSpec extends metrics.SamplerSpec with RangedGate
 class QualityClassifierRangedSpec extends text.QualityClassifierSpec
   with RangedGate
 class FertilityRangedSpec extends text.FertilitySpec with RangedGate
@@ -61,11 +50,5 @@ class CorpusCurationRangedSpec extends pipeline.CorpusCurationSpec
   with RangedGate
 class VisualClustersRangedSpec extends multimodal.VisualClustersSpec
   with RangedGate
-class SemanticClustersRangedSpec extends sim.SimilarityOpsSpec with RangedGate {
-  override protected def rerun(t: String): Boolean =
-    t.startsWith("semantic clusters")
-}
-class StreamClustersRangedSpec extends streaming.StreamsSpec with RangedGate {
-  override protected def rerun(t: String): Boolean =
-    t.startsWith("streaming cluster maintenance")
-}
+class SemanticClustersRangedSpec extends sim.SimilarityOpsSpec with RangedGate
+class StreamClustersRangedSpec extends streaming.StreamsSpec with RangedGate

@@ -88,6 +88,24 @@ class DupClustersSpec extends SparkSpecBase {
     assert(read.value === edges.size)
   }
 
+  test("connected components: the distributed loop keeps only the " +
+      "returned round persisted") {
+    // a 32-node chain takes several pointer-jumping rounds
+    val pairs = (0L until 31L).map(i => (i, i + 1)).toDF("ida", "idb")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val comp = withGate(forceDistributed = true) {
+      DupClusters.connectedComponents(pairs)
+    }
+    val added = sc.getPersistentRDDs.keySet -- before
+    assert(added.size <= 1, sc.getPersistentRDDs.filter(kv =>
+      added.contains(kv._1)).values.map(_.toString).mkString("; "))
+    // the kept round still backs the result
+    val got = comp.collect()
+    assert(got.length === 32 && got.forall(_.getLong(1) == 0L))
+    added.foreach(id => sc.getPersistentRDDs(id).unpersist(blocking = true))
+  }
+
   test("updateClusters: batch merges relabel via root remap — cluster " +
       "unions, smaller-id newcomer takes over as root, untouched " +
       "clusters pass through, new singleton edges appear") {

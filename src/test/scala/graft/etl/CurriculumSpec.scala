@@ -29,4 +29,11 @@ class CurriculumSpec extends SparkSpecBase {
     assert(keys(7L) === keys(7L))
     assert(keys(7L) !== keys(8L))
   }
+
+  test("an empty input yields no rows") {
+    val df = Seq.empty[(Long, Long)].toDF("id", "q")
+    val out = Curriculum.curriculumOrder(df, "id", "q", 2, 1L)
+    assert(out.columns.toSeq === Seq("id", "q", "band", "shuffle_key"))
+    assert(out.collect().isEmpty)
+  }
 }

@@ -101,8 +101,8 @@ class GlobalIndexSpec extends SparkSpecBase {
       val k = (i * 7919 % 4000).toLong
       (k, if (k % 17 == 0) null else java.lang.Long.valueOf(k % 7 + 1))
     }.toDF("k", "v")
-    val out = GlobalIndex.withGlobalCumsum(df, Seq(col("k")), col("v"),
-        numPartitions = 8)
+    val out = GlobalIndex.withGlobalCumsumReleasable(df, Seq(col("k")),
+        col("v"), numPartitions = 8)._1
       .collect().map(r => (r.getLong(0),
         if (r.isNullAt(1)) 0L else r.getLong(1), r.getLong(2)))
     assert(out.length === 4000)
@@ -114,8 +114,8 @@ class GlobalIndexSpec extends SparkSpecBase {
     }
     // no single-partition exchange in the plan
     val plan = withGate(forceDistributed = true) {
-      GlobalIndex.withGlobalCumsum(df, Seq(col("k")), col("v"),
-        numPartitions = 8).queryExecution.executedPlan.toString
+      GlobalIndex.withGlobalCumsumReleasable(df, Seq(col("k")), col("v"),
+        numPartitions = 8)._1.queryExecution.executedPlan.toString
     }
     assert(!plan.contains("Exchange SinglePartition"))
     spark.catalog.clearCache()
@@ -145,8 +145,8 @@ class GlobalIndexSpec extends SparkSpecBase {
     val df = keys.map(k =>
       (k, if (k % 13 == 0) null else java.lang.Long.valueOf(k % 5 + 1)))
       .toDF("k", "v")
-    val (a, b) = bothGateModes(dump(GlobalIndex.withGlobalCumsum(
-      df, Seq(col("k")), col("v"), "cx", numPartitions = 8), "k"))
+    val (a, b) = bothGateModes(dump(GlobalIndex.withGlobalCumsumReleasable(
+      df, Seq(col("k")), col("v"), "cx", numPartitions = 8)._1, "k"))
     assert(a === b)
     val expected = a._2.map(r => Option(r(1)).fold(0L)(_.asInstanceOf[Long]))
       .scanLeft(0L)(_ + _).init
@@ -186,7 +186,8 @@ class GlobalIndexSpec extends SparkSpecBase {
       val (run, totals, n) = GlobalIndex.withGlobalRunning(df, Seq(col("k")),
         Seq(col("k") -> "xk"), indexCol = "rn")
       (dump(GlobalIndex.withGlobalIndex(df, Seq(col("k"))), "k"),
-        dump(GlobalIndex.withGlobalCumsum(df, Seq(col("k")), col("k")), "k"),
+        dump(GlobalIndex.withGlobalCumsumReleasable(df, Seq(col("k")),
+          col("k"))._1, "k"),
         dump(run, "k"), totals.toSeq, n,
         dump(GlobalIndex.withGroupedIndex(df, Seq("g"), Seq(col("k"))), "k"))
     }

@@ -53,4 +53,10 @@ class SplitSkewSpec extends SparkSpecBase {
     assert(rows(1)._1 === "b" && rows(2)._1 === "c")
     assert(rows(1)._5 === 666666L) // 2*4e6/12 floored
   }
+
+  test("embargo split of an empty input is an empty report") {
+    val df = Seq.empty[(String, java.sql.Timestamp)].toDF("g", "t")
+    assert(TemporalSplit.embargoSplitReport(df, "g", "t", 70, 2L)
+      .collect().isEmpty)
+  }
 }

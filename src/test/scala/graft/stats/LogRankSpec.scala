@@ -42,4 +42,12 @@ class LogRankSpec extends SparkSpecBase {
     assert(r.getAs[Long]("deaths") === 0L)
     assert(r.isNullAt(r.fieldIndex("chi2_micro")))
   }
+
+  test("empty input: one row of zeros, n_subjects and chi2 null") {
+    val r = lr()
+    assert(r.isNullAt(r.fieldIndex("n_subjects")))
+    Seq("deaths", "o_a", "e_a_micro", "o_b", "e_b_micro", "v_micro")
+      .foreach(c => assert(r.getAs[Long](c) === 0L, c))
+    assert(r.isNullAt(r.fieldIndex("chi2_micro")))
+  }
 }

@@ -28,4 +28,11 @@ class QuantileMapSpec extends SparkSpecBase {
       .map(q => (q.getLong(0), q.getLong(2), q.getLong(3)))
     assert(out.toSeq === Seq((100L, 2L, 2L), (200L, 4L, 4L)))
   }
+
+  test("an empty sample or an empty reference maps nothing") {
+    val none = Seq.empty[Long].toDF("x")
+    val some = Seq(1L, 2L).toDF("x")
+    assert(QuantileMap.quantileMap(none, "x", some, "x").collect().isEmpty)
+    assert(QuantileMap.quantileMap(some, "x", none, "x").collect().isEmpty)
+  }
 }

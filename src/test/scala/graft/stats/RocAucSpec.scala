@@ -51,4 +51,9 @@ class RocAucSpec extends SparkSpecBase {
     assert(g(0).getAs[Long]("n_pos") === 1L) // id 1 lands in decile 0
     assert(g.map(_.getAs[Long]("n_pos")).sum === 1L)
   }
+
+  test("gains table of an empty input is empty") {
+    val df = Seq.empty[(Long, Long, Boolean)].toDF("id", "score", "label")
+    assert(RocAuc.gainsTable(df, "id", "score", "label").collect().isEmpty)
+  }
 }

@@ -49,4 +49,8 @@ class SurvivalSpec extends SparkSpecBase {
     assert(out(0).getAs[Long]("n_censored_at_t") === 1L)
     assert(out(0).getAs[Long]("ln_s_micro") === term(3, 2))
   }
+
+  test("empty input yields an empty curve") {
+    assert(km().isEmpty)
+  }
 }

@@ -26,4 +26,10 @@ class CalibrationSpec extends SparkSpecBase {
       r.getLong(3))).toSeq ===
       Seq((0L, 3L, 1L, 333333L), (1L, 1L, 1L, 1000000L)))
   }
+
+  test("an empty input yields no bins") {
+    val scored = Seq.empty[(Double, Double)].toDF("y", "z")
+    assert(QualityClassifier.calibrationTable(scored, "y", "z", 2)
+      .collect().isEmpty)
+  }
 }
