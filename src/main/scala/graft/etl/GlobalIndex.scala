@@ -48,8 +48,8 @@ object GlobalIndex {
   val MaxDriverRows: Long = 1L << 16
 
   /** [[withGlobalIndex]] plus an explicit release handle for the internal
-    * range-partitioned cache (the fitReleasable pattern): callers invoke the
-    * handle once the indexed output is materialized. Releasing BEFORE
+    * range-partitioned cache: callers invoke the handle once the indexed
+    * output is materialized. Releasing BEFORE
     * materialization is unsafe — a re-evaluation would resample the range
     * boundaries and shift the index. On the driver path the handle is a
     * no-op (the result is a local frame). */

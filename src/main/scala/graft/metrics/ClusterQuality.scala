@@ -107,26 +107,12 @@ object ClusterQuality {
     * join computes each distance with the codegen'd allocation-free
     * [[graft.functions.EuclideanDistance]] loop (the composed
     * zip_with/aggregate form allocates a zipped array per pair — measured
-    * 53 s vs 6 s on the sf0.1 pairwise scan).
-    *
-    * `maxExactRows` guards the quadratic path: above it the call routes to
-    * the linear [[silhouetteSquaredEuclid]] closed form (squared-Euclidean
-    * semantics — MLlib's ClusteringEvaluator definition) instead of
-    * materializing an n² pair join. The default keeps exact sklearn parity
-    * for survey-scale inputs and makes 100 TB calls structurally safe.
-    * Because the fallback is a DIFFERENT metric definition, callers whose
-    * consumers pin the exact Euclidean semantics (the m13 oracle) pass
-    * `maxExactRows = Long.MaxValue`: the sentinel skips the guard's count()
-    * pass entirely and always takes the exact path. Callers in fit loops
-    * that already know the cardinality pass `rowCount` to skip the count()
-    * action too. */
+    * 53 s vs 6 s on the sf0.1 pairwise scan). Callers that want the
+    * linear form call [[silhouetteSquaredEuclid]], a different metric
+    * (squared-Euclidean, MLlib's ClusteringEvaluator definition). */
   def silhouette(df: DataFrame, idCol: String, vecCol: String,
-      labelCol: String, maxExactRows: Long = 100000L,
-      rowCount: Option[Long] = None): Double = {
+      labelCol: String): Double = {
     import graft.functions.EuclideanDistance.euclideanDist
-    if (maxExactRows != Long.MaxValue &&
-        rowCount.getOrElse(df.count()) > maxExactRows)
-      return silhouetteSquaredEuclid(df, vecCol, labelCol)
     val v = df.select(col(idCol).as("id"),
       col(labelCol).cast("string").as("label"),
       col(vecCol).cast("array<double>").as("v"))

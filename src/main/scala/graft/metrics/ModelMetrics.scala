@@ -5,7 +5,7 @@ import org.apache.spark.ml.evaluation.{ClusteringEvaluator, MulticlassClassifica
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Model-level metrics (SURVEY.md M13, M16, M18/M19, M25, M26;
+/** Model-level metrics (SURVEY.md M13, M18/M19, M25, M26;
   * reference metrics.py). Each reduces distributed passes to small driver
   * aggregates; refits reuse MLlib estimators.
   */
@@ -18,21 +18,6 @@ object ModelMetrics {
     new ClusteringEvaluator().setFeaturesCol(featuresCol)
       .setPredictionCol(predictionCol).setMetricName("silhouette")
       .evaluate(labeled)
-
-  /** M16: random-baseline checker (metrics.py:149-174) — metric ratios of
-    * the real clustering vs `nRuns` seeded random labelings of the same k. */
-  def randomBaseline(labeled: DataFrame, featuresCol: String, k: Int,
-      nRuns: Int = 3): Map[String, Double] = {
-    val real = silhouette(labeled, featuresCol)
-    val rand = (1 to nRuns).map { i =>
-      val randomized = labeled.withColumn("cluster",
-        pmod(hash(col(featuresCol).cast("string"), lit(i)), lit(k)).cast("int"))
-      silhouette(randomized, featuresCol)
-    }
-    val randMean = rand.sum / rand.size
-    Map("silhouette" -> real, "random_silhouette" -> randMean,
-      "silhouette_ratio" -> (if (randMean == 0) 0.0 else real / randMean))
-  }
 
   /** M18/M19: consistency check — deterministic 90/10 split by key-hash
     * (stable across runs, unlike randomSplit), ONE refit on the 90%, and

@@ -57,15 +57,18 @@ object RocAuc {
       when(col(labelCol), 1L).otherwise(0L).as("__y"))
     // distinct-score counts + exclusive cumulative of STRICTLY higher
     // scores: a window over the value table, never over rows
-    val cnt = rows.groupBy("__s").agg(count(lit(1)).as("c"))
+    val cnt = rows.groupBy("__s")
+      .agg(count(lit(1)).as("c"), sum("__y").as("p"))
     // r16 (guide §2.2): "strictly higher" is the EXCLUSIVE prefix sum in
     // descending score order — the distributed two-pass scheme replaces
     // the former single-partition Window.orderBy(desc) funnel
     val (running, totals, _) = graft.etl.GlobalIndex.withGlobalRunning(
-      cnt, Seq(col("__s").desc), Seq(col("c") -> "above"))
+      cnt, Seq(col("__s").desc), Seq(col("c") -> "above", col("p") -> "__p"))
     val above = running.select("__s", "above")
-    // the row count is the core's grand total of the score counts
+    // the row count and the positives are the core's grand totals of the
+    // score cells
     val n = totals(0)
+    val tp = totals(1)
     val ranked = rows
       .withColumn("rn", row_number().over(
         Window.partitionBy("__s").orderBy("__id")).cast("long"))
@@ -80,16 +83,13 @@ object RocAuc {
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .withColumn("cum_pos", sum("n_pos").over(Window.orderBy("decile")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .crossJoin(broadcast(ranked.agg(sum("__y").as("__tp"))))
       .select(col("decile"), col("n_rows"), col("n_pos"),
         col("cum_rows"), col("cum_pos"),
-        when(col("__tp") === 0, lit(null).cast("long"))
-          .otherwise(expr("cum_pos * 1000000L div __tp"))
-          .as("capture_micro"),
-        when(col("__tp") === 0, lit(null).cast("long"))
-          .otherwise(expr(
-            s"""cast((cast(cum_pos as decimal(38,0)) * ${n}L * 1000000)
-                div (cast(cum_rows as decimal(38,0)) * __tp) as long)"""))
+        (if (tp == 0) lit(null).cast("long")
+         else expr(s"cum_pos * 1000000L div ${tp}L")).as("capture_micro"),
+        (if (tp == 0) lit(null).cast("long")
+         else expr(s"""cast((cast(cum_pos as decimal(38,0)) * ${n}L * 1000000)
+                div (cast(cum_rows as decimal(38,0)) * ${tp}L) as long)"""))
           .as("lift_micro"))
   }
 

@@ -367,17 +367,12 @@ object StatsQueries {
   /** M13: exact Euclidean silhouette over the embeddings with their labels —
     * the quadratic definition, oracle'd by the same pairwise computation in
     * SQL. (The linear-time squared-Euclidean variant lives in KMeansSearch
-    * via MLlib's ClusteringEvaluator.) The sentinel `maxExactRows =
-    * Long.MaxValue` pins the EXACT path at every scale factor — the oracle
-    * computes the exact pairwise definition, so a silent reroute to the
-    * squared-Euclidean closed form above 100k rows would change the metric
-    * out from under it (and the sentinel also skips the guard's count()). */
+    * via MLlib's ClusteringEvaluator.) */
   private val m13 = Q(
     (s, d) => {
       import s.implicits._
       Seq(Tuple1(rnd(ClusterQuality.silhouette(
-        Tables.embeddings(s, d), "vec_id", "embedding", "label",
-        maxExactRows = Long.MaxValue), 6)))
+        Tables.embeddings(s, d), "vec_id", "embedding", "label"), 6)))
         .toDF("silhouette")
     },
     Some(s"""WITH $embTallSql,

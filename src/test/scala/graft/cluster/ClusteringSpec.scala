@@ -135,9 +135,8 @@ class ClusteringSpec extends SparkSpecBase {
     }
     val df = rows.toDF("id", "qa1", "qa2", "qa3", "qb1", "qb2", "qb3")
     val cols = Seq("qa1", "qa2", "qa3", "qb1", "qb2", "qb3")
-    val (single, _, rel) = LatentClassEM.fitReleasable(df, cols, "id", k = 2,
+    val (single, _) = LatentClassEM.fit(df, cols, "id", k = 2,
       maxIter = 40, seed = 43, initLow = 0.05)
-    rel()
     // restart grid covering seeds 43..45 must escape seed 43's basin
     val (multi, _) = LatentClassEM.selectK(df, cols, "id", ks = 2 until 3,
       maxIter = 40, nrep = 3, baseSeed = 43)
@@ -158,11 +157,10 @@ class ClusteringSpec extends SparkSpecBase {
       concat(lit("n"), pmod(col("c_nationkey"), lit(5))).as("nat_bucket"),
       when(col("c_acctbal") >= 0, "pos").otherwise("neg").as("bal_sign"))
     val cols = Seq("c_mktsegment", "nat_bucket", "bal_sign")
-    val (m2f, _, rel2) = LatentClassEM.fitReleasable(cats, cols, "c_custkey",
+    val (m2f, _) = LatentClassEM.fit(cats, cols, "c_custkey",
       k = 3, maxIter = 2)
-    val (m10f, _, rel10) = LatentClassEM.fitReleasable(cats, cols, "c_custkey",
+    val (m10f, _) = LatentClassEM.fit(cats, cols, "c_custkey",
       k = 3, maxIter = 10)
-    rel2(); rel10()
     assert(m10f.logLik >= m2f.logLik - 1e-6,
       s"more EM iterations worsened loglik: ${m10f.logLik} vs ${m2f.logLik}")
   }
@@ -219,16 +217,6 @@ class ClusteringSpec extends SparkSpecBase {
       .evaluate(emb.withColumn("label", col("label").cast("int")))
     assert(math.abs(closed - mllib) < 1e-9,
       s"closed=$closed mllib=$mllib")
-  }
-
-  test("exact silhouette routes to the linear closed form above maxExactRows") {
-    val emb = Tables_embeddings
-    val routed = graft.metrics.ClusterQuality.silhouette(
-      emb, "vec_id", "embedding", "label", maxExactRows = 5)
-    val linear = graft.metrics.ClusterQuality.silhouetteSquaredEuclid(
-      emb, "embedding", "label")
-    assert(routed === linear,
-      "guarded call must return the squared-Euclid closed form, not the pair join")
   }
 
   test("FeaturePipeline.pcaAtVariance picks minimal n reaching the threshold") {
